@@ -21,6 +21,11 @@ Two writers, one semantics (SURVEY.md §1.2-1.4):
    (the slice->file grouping is inherent to the format, not a scale loss —
    each slice is bounded by the slice period).
 
+Every guardian-format object — from ``write_guardian_format``, the commit
+layer's rewrites and the ``guardian`` DataSource batch writer
+(sources/guardian_source.py) — is framed by one function,
+:func:`frame_array_objects`, so the writers cannot drift apart byte-wise.
+
 No multipart-resume protocol is ported (BackupClient.scala:41-179): atomic
 file commit + checkpoint/deterministic recompute replace 200 LoC of upload
 surgery (SURVEY.md §4.4).
@@ -98,8 +103,7 @@ def _apply_hadoop_gzip_level(records: DataFrame, level: int | None) -> None:
     guardian-format writer (Python zlib) honors the exact level."""
     if level is None:
         return
-    if not 1 <= level <= 9:
-        raise ValueError(f"gzip level must be 1-9, got {level}")
+    level = gzip_level(level)
     cls = "BEST_SPEED" if level <= 3 else ("BEST_COMPRESSION" if level >= 7 else "DEFAULT_COMPRESSION")
     spark = records.sparkSession
     spark.sparkContext._jsc.hadoopConfiguration().set("zlib.compress.level", cls)
@@ -217,6 +221,80 @@ def _ensure_dest_dir(dest: str) -> None:
     filesystem.create_dir(base, recursive=True)
 
 
+def gzip_level(level: int | None) -> int:
+    """The gzip level a writer compresses at: 1-9 as the reference accepts
+    (configs/Compression.scala:5), zlib's default 6 when unset."""
+    if level is None:
+        return 6
+    if not 1 <= level <= 9:
+        raise ValueError(f"gzip level must be 1-9, got {level}")
+    return level
+
+
+def _decorate_key(key: str, decoration: str) -> str:
+    """Insert ``decoration`` between the ISO stem and ``.json[.gz]``."""
+    if not decoration:
+        return key
+    stem, ext = (key[:-3], ".gz") if key.endswith(".gz") else (key, "")
+    assert stem.endswith(".json")
+    return stem[: -len(".json")] + decoration + ".json" + ext
+
+
+def frame_array_objects(
+    rows,
+    open_object,
+    compression: str | None = None,
+    compression_level: int = 6,
+    key_decoration: str = "",
+    interrupted_key: str | None = None,
+) -> list[tuple]:
+    """Guardian-format framing (BackupClientInterface.scala:214-298), the one
+    copy every writer of array objects calls. ``rows``: mappings with
+    ``slice, topic, partition, offset, json``, sorted by the first four. Each
+    key ``calculate_key(slice)`` (+ ``key_decoration``) becomes one object
+    ``[json,json,...]`` (``,null]`` for ``interrupted_key``, terminateSource
+    :594-600) on the stream ``open_object(key)``, closed here. Gzip is one
+    ``mtime=0`` member whose FNAME is set explicitly to the physical name
+    without ``.gz``, so the bytes never depend on the stream's ``.name``
+    (deterministic like the reference's GZIPOutputStream,
+    BackupClient.scala:248-285). Returns per-(key, topic, partition) stats of
+    the rows written: ``(key, topic, partition, n, n_offsets, lo, hi)``."""
+    cur_key = None
+    fh = raw = None
+    stats: dict = {}
+
+    def finish() -> None:
+        if fh is not None:
+            fh.write(b",null]" if cur_key == interrupted_key else b"]")
+            fh.close()
+            if raw is not fh:
+                raw.close()  # GzipFile.close() leaves the byte stream open
+
+    for row in rows:
+        key = _decorate_key(calculate_key(row["slice"], compression), key_decoration)
+        if key != cur_key:
+            finish()
+            cur_key = key
+            raw = open_object(key)
+            fh = raw if compression != "gzip" else _gzip.GzipFile(
+                filename=physical_name(key), fileobj=raw, mode="wb",
+                compresslevel=compression_level, mtime=0,
+            )
+            fh.write(b"[")
+        else:
+            fh.write(b",")
+        fh.write(row["json"].encode("utf-8"))
+        st = stats.setdefault((cur_key, row["topic"], row["partition"]), [0, 0, None, None])
+        st[0] += 1
+        off = row["offset"]
+        if off is not None:
+            st[1] += 1
+            st[2] = off if st[2] is None else min(st[2], off)
+            st[3] = off if st[3] is None else max(st[3], off)
+    finish()
+    return [(k, t, p, n, nn, lo, hi) for (k, t, p), (n, nn, lo, hi) in stats.items()]
+
+
 def write_guardian_format(
     records: DataFrame,
     dest: str,
@@ -239,9 +317,8 @@ def write_guardian_format(
     materializing a slice in memory... except for the gzip/array framing which
     is per-file streaming anyway. ``dest`` may be a bare local path or any
     ``scheme://`` URI ``pyarrow.fs`` can dial (file, s3/s3a, gs, hdfs) — see
-    :func:`_open_slice_output`. Gzip members are framed with ``mtime=0``
-    (deterministic bytes, matching the JVM GZIPOutputStream the reference
-    writes through — BackupClient.scala:248-285).
+    :func:`_open_slice_output`. Objects are framed by
+    :func:`frame_array_objects`.
     """
     _ensure_dest_dir(dest)
     sliced = with_slice(records, config, anchor_us)
@@ -281,8 +358,8 @@ def write_array_objects(
     records the group's FIRST slice, so the merged object keeps a
     time-parseable key and range pruning stays sound). ``wire`` columns:
     ``(slice timestamp, topic, partition, offset, json)``; one output object
-    per distinct slice, named ``calculate_key(slice)``, reference array
-    framing, executors write their slices in parallel.
+    per distinct slice, named ``calculate_key(slice)``, framed by
+    :func:`frame_array_objects`; executors write their slices in parallel.
 
     The write is ONE job: each task writes its objects and returns
     per-(object, topic, partition) stats computed from exactly the rows it
@@ -304,74 +381,22 @@ def write_array_objects(
     wire = wire.repartition("slice").sortWithinPartitions(
         "slice", "topic", "partition", "offset"
     )
-
-    if compression_level is not None and not 1 <= compression_level <= 9:
-        raise ValueError(f"gzip level must be 1-9, got {compression_level}")
-    comp = compression
-    comp_level = compression_level if compression_level is not None else 6  # zlib default
-    decoration = key_decoration
-
-    def _decorate(key: str) -> str:
-        if not decoration:
-            return key
-        stem, ext = (key[:-3], ".gz") if key.endswith(".gz") else (key, "")
-        assert stem.endswith(".json")
-        return stem[: -len(".json")] + decoration + ".json" + ext
-    interrupted_local = interrupted
-    last_slice_bc = last_slice
+    level = gzip_level(compression_level)
+    interrupted_key = (
+        _decorate_key(calculate_key(last_slice, compression), key_decoration)
+        if interrupted and last_slice is not None
+        else None
+    )
 
     def write_partition(rows):
-        cur_key = None
-        fh = None
-        raw = None
-        first = True
-        # (key, topic, partition) -> [rows, non-null-offset rows, lo, hi],
-        # accumulated from exactly the rows this task writes
-        stats: dict = {}
-
-        def finish(terminate_interrupted: bool) -> None:
-            nonlocal fh, raw
-            if fh is not None:
-                fh.write(b",null]" if terminate_interrupted else b"]")
-                fh.close()
-                if raw is not None and raw is not fh:
-                    raw.close()  # GzipFile.close() leaves the byte stream open
-                fh = None
-                raw = None
-
-        for row in rows:
-            key = _decorate(calculate_key(row["slice"], comp))
-            if key != cur_key:
-                finish(False)
-                cur_key = key
-                raw = _open_slice_output(dest, physical_name(key))
-                fh = (
-                    _gzip.GzipFile(fileobj=raw, mode="wb", compresslevel=comp_level, mtime=0)
-                    if comp == "gzip"
-                    else raw
-                )
-                fh.write(b"[")
-                first = True
-            if not first:
-                fh.write(b",")
-            fh.write(row["json"].encode("utf-8"))
-            first = False
-            st = stats.setdefault(
-                (cur_key, row["topic"], row["partition"]), [0, 0, None, None]
-            )
-            st[0] += 1
-            off = row["offset"]
-            if off is not None:
-                st[1] += 1
-                st[2] = off if st[2] is None else min(st[2], off)
-                st[3] = off if st[3] is None else max(st[3], off)
-        if cur_key is not None:
-            is_last = last_slice_bc is not None and _decorate(calculate_key(last_slice_bc, comp)) == cur_key
-            finish(interrupted_local and is_last)
-        return [
-            (k, t, p, n, nn, lo, hi)
-            for (k, t, p), (n, nn, lo, hi) in stats.items()
-        ]
+        return frame_array_objects(
+            rows,
+            lambda key: _open_slice_output(dest, physical_name(key)),
+            compression=compression,
+            compression_level=level,
+            key_decoration=key_decoration,
+            interrupted_key=interrupted_key,
+        )
 
     # ONE job writes and reports: keys + census + offset envelopes all come
     # from the rows actually written (no re-evaluation of `wire`)

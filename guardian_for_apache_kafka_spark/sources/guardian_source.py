@@ -26,7 +26,10 @@ This is the INTEGRATION surface — schema, partitioning and pushdown for
 ad-hoc SQL over archives. The JVM-side ``operators/restore.py`` paths
 remain the bulk-restore hot path (whole-file text scan + ``from_json``,
 no Python in the loop); parity between the two is asserted in
-tests/test_backup_restore.py.
+tests/test_backup_restore.py. The batch writer
+(``df.write.format("guardian")``) frames its objects with the bulk
+writer's framer, operators/backup.frame_array_objects, so both write the
+same bytes by construction.
 """
 
 from __future__ import annotations
@@ -34,7 +37,6 @@ from __future__ import annotations
 import base64
 import datetime as _dt
 import gzip as _gzip
-import io
 import json
 from collections.abc import Iterator, Sequence
 
@@ -273,7 +275,7 @@ class GuardianReader(DataSourceReader):
     def read(self, partition: GuardianObjectPartition) -> Iterator[tuple]:
         blob = _open_bytes(partition.path)
         if partition.path.endswith(".gz"):
-            blob = _gzip.GzipFile(fileobj=io.BytesIO(blob)).read()
+            blob = _gzip.decompress(blob)
         try:
             records = json.loads(blob.decode("utf-8"))
         except ValueError:
@@ -407,8 +409,6 @@ class GuardianStreamReader(DataSourceStreamReader):
 
 from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage  # noqa: E402
 
-_CHRONO_SECONDS = {"SECONDS": 1, "MINUTES": 60, "HOURS": 3600, "DAYS": 86400}
-
 
 class GuardianWriteCommit(WriterCommitMessage):
     """Per-task commit message: the (slice key, staged relative path) pairs
@@ -498,17 +498,84 @@ def _wire_json(rec: dict) -> str:
     return "{" + ",".join(parts) + "}"
 
 
+def _writer_options(options, schema: StructType) -> tuple:
+    """(path, field positions by name, slice period in micros, compression,
+    gzip level) for a guardian writer — validated when the writer is built,
+    so a bad option fails before any task runs."""
+    from guardian_for_apache_kafka_spark.core.timeslice import ChronoUnitSlice
+    from guardian_for_apache_kafka_spark.operators.backup import gzip_level
+
+    path = options.get("path")
+    if not path:
+        raise ValueError("guardian datasource requires a path")
+    # resolve field positions BY NAME from the caller's schema — rows
+    # arrive positionally in the caller's column order, and key/value
+    # are both binary, so positional assumptions would swap them
+    # SILENTLY on a reordered select (review r6 finding)
+    fields = [f.name for f in RECORD_SCHEMA.fields]
+    names = [f.name for f in schema.fields]
+    missing = [f for f in fields if f not in names]
+    if missing:
+        raise ValueError(
+            f"guardian writer needs record columns {tuple(fields)}; "
+            f"missing from input schema: {missing}"
+        )
+    idx = {f: names.index(f) for f in fields}
+    unit = (options.get("chronounitslice") or "HOURS").upper()
+    period_us = ChronoUnitSlice(unit).period_micros
+    compression = options.get("compression")
+    if compression not in (None, "gzip"):
+        raise ValueError(f"unsupported compression: {compression}")
+    level = options.get("compressionlevel")
+    return path, idx, period_us, compression, gzip_level(None if level is None else int(level))
+
+
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def _wire_rows(rows, idx: dict, period_us: int) -> list[dict]:
+    """Input rows -> wire record dicts plus ``slice`` and ``json``, sorted by
+    (slice, topic, partition, offset) — the order
+    operators/backup.frame_array_objects frames."""
+    out = []
+    for row in rows:
+        ts = row[idx["timestamp"]]
+        if ts.tzinfo is None:
+            ts = ts.replace(tzinfo=_dt.timezone.utc)
+        # integer-exact epoch micros: timedelta normalizes to (days
+        # sign-carrying, seconds and microseconds non-negative), so the floor
+        # divisions are right before 1970 too (1969-12-31T23:59:59.999Z is -1 ms)
+        d = ts - _EPOCH
+        us = (d.days * 86400 + d.seconds) * 1_000_000 + d.microseconds
+        key = row[idx["key"]]
+        val = row[idx["value"]]
+        rec = {
+            "topic": row[idx["topic"]],
+            "partition": row[idx["partition"]],
+            "offset": row[idx["offset"]],
+            "key": None if key is None else base64.b64encode(bytes(key)).decode(),
+            "value": None if val is None else base64.b64encode(bytes(val)).decode(),
+            "timestamp": us // 1000,
+            "timestamp_type": row[idx["timestamp_type"]],
+        }
+        rec["json"] = _wire_json(rec)
+        rec["slice"] = _EPOCH + _dt.timedelta(microseconds=us // period_us * period_us)
+        out.append(rec)
+    out.sort(key=lambda r: (r["slice"], r["topic"], r["partition"], r["offset"]))
+    return out
+
+
 class GuardianWriter(DataSourceWriter):
     """Batch write half of the format: ``df.write.format("guardian")
     .option("chronoUnitSlice", "hours").mode(...).save(dest)`` writes the
     guardian archive layout (one JSON array object per slice, wire records
     in (topic, partition, offset) order, optional deterministic gzip) —
     byte-exact against THIS repo's bulk writer,
-    operators/backup.write_guardian_format (parity-tested byte-for-byte),
-    and against the upstream reference wire format: a null Kafka key is
-    rendered as an explicit ``"key":null``, exactly as the reference's
-    Circe Encoder.forProduct7 + Printer.noSpaces emits it
-    (core/.../codecs/Circe.scala:19-38).
+    operators/backup.write_guardian_format, because both frame objects
+    through operators/backup.frame_array_objects; and against the upstream
+    reference wire format: a null Kafka key is rendered as an explicit
+    ``"key":null``, exactly as the reference's Circe Encoder.forProduct7 +
+    Printer.noSpaces emits it (core/.../codecs/Circe.scala:19-38).
 
     mode('overwrite') is idempotent-converging but NOT job-atomic: each
     slice swap is stage-then-delete (the complete replacement exists in
@@ -517,134 +584,69 @@ class GuardianWriter(DataSourceWriter):
     slices; re-running the identical write converges. True job-level
     atomicity needs a versioned manifest swap on top.
 
-    Scale/commit contract: each task stages its slices' part files under a
-    run-scoped staging dir and the driver commit RENAMES single-part slices
-    into place (a task-failure retry never leaves a half-written final
-    object — same atomicity discipline as maintenance's rename-swap). A
-    slice spanning multiple tasks is merged and re-sorted at commit
-    (driver-side, slice-sized): pre-``repartition`` the input by slice to
-    keep commit rename-only — this writer is the INTEGRATION surface; the
-    foreachPartition bulk path in operators/backup.py streams slices
+    Scale/commit contract: each task stages each of its slices as a
+    finished object (gzip included) under a run-scoped staging dir, and
+    the driver commit RENAMES single-part slices into place (a task-failure
+    retry never leaves a half-written final object — same atomicity
+    discipline as maintenance's rename-swap). A slice spanning multiple
+    tasks is decoded, merge-sorted and framed again at commit (driver-side,
+    slice-sized): pre-``repartition`` the input by slice to keep commit
+    rename-only, plain or gzip — this writer is the INTEGRATION surface;
+    the foreachPartition bulk path in operators/backup.py streams slices
     without any driver bytes."""
 
-    #: derived from the canonical record schema — a field added or renamed
-    #: there cannot silently drift from the writer's validation list
-    RECORD_FIELDS = tuple(f.name for f in RECORD_SCHEMA.fields)
-
     def __init__(self, options, overwrite: bool, schema: StructType):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("guardian datasource requires a path")
-        # resolve field positions BY NAME from the caller's schema — rows
-        # arrive positionally in the caller's column order, and key/value
-        # are both binary, so positional assumptions would swap them
-        # SILENTLY on a reordered select (review r6 finding)
-        names = [f.name for f in schema.fields]
-        missing = [f for f in self.RECORD_FIELDS if f not in names]
-        if missing:
-            raise ValueError(
-                f"guardian writer needs record columns {self.RECORD_FIELDS}; "
-                f"missing from input schema: {missing}"
-            )
-        self.idx = {f: names.index(f) for f in self.RECORD_FIELDS}
-        unit = (options.get("chronounitslice") or "HOURS").upper()
-        if unit not in _CHRONO_SECONDS:
-            raise ValueError(f"unsupported chronoUnitSlice: {unit}")
-        self.period_s = _CHRONO_SECONDS[unit]
-        self.compression = options.get("compression")
-        if self.compression not in (None, "gzip"):
-            raise ValueError(f"unsupported compression: {self.compression}")
-        lvl = options.get("compressionlevel")
-        self.level = int(lvl) if lvl else 6
-        self.overwrite = overwrite
         import uuid
 
+        self.path, self.idx, self.period_us, self.compression, self.level = _writer_options(
+            options, schema
+        )
+        self.overwrite = overwrite
         self.staging = f"_guardian_staging_{uuid.uuid4().hex}"
+
+    def _frame(self, rows, name_of) -> list:
+        """Frame sorted wire rows into the staging dir, each object named
+        ``name_of(key)``; returns the (slice key, staged path) pairs."""
+        from guardian_for_apache_kafka_spark.operators.backup import (
+            _ensure_dest_dir,
+            _open_slice_output,
+            frame_array_objects,
+        )
+
+        staging_dir = f"{self.path.rstrip('/')}/{self.staging}"
+        parts = []
+
+        def open_part(key: str):
+            if not parts:
+                _ensure_dest_dir(staging_dir)
+            parts.append((key, f"{self.staging}/{name_of(key)}"))
+            return _open_slice_output(staging_dir, name_of(key))
+
+        frame_array_objects(rows, open_part, self.compression, self.level)
+        return parts
 
     # -- executor side ------------------------------------------------------
     def write(self, iterator) -> GuardianWriteCommit:
         import uuid
 
-        from guardian_for_apache_kafka_spark.core.timeslice import calculate_key
         from guardian_for_apache_kafka_spark.operators.backup import physical_name
 
-        write_bytes, *_ = _fs_ops(self.path)
-        ix = self.idx
-        buckets: dict = {}
-        for row in iterator:
-            ts = row[ix["timestamp"]]
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            # integer-exact epoch millis via divmod on the timedelta since
-            # epoch: timedelta normalizes to (days sign-carrying, seconds
-            # and microseconds non-negative), so flooring is correct for
-            # pre-1970 timestamps too (ADVICE r6: int(ts.timestamp())*1000
-            # + us//1000 truncates toward zero on the seconds but adds a
-            # non-negative millis part — 1969-12-31T23:59:59.999Z came out
-            # +999 instead of -1)
-            d = ts - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-            ms = (d.days * 86400 + d.seconds) * 1000 + d.microseconds // 1000
-            start_s = (ms // 1000 // self.period_s) * self.period_s
-            start = _dt.datetime.fromtimestamp(start_s, _dt.timezone.utc)
-            key = row[ix["key"]]
-            val = row[ix["value"]]
-            buckets.setdefault(start, []).append(
-                (
-                    row[ix["topic"]],
-                    row[ix["partition"]],
-                    row[ix["offset"]],
-                    None if key is None else base64.b64encode(bytes(key)).decode(),
-                    base64.b64encode(bytes(val)).decode(),
-                    ms,
-                    row[ix["timestamp_type"]],
-                )
-            )
         tid = uuid.uuid4().hex[:12]
-        parts = []
-        for start in sorted(buckets):
-            rows = sorted(buckets[start], key=lambda r: (r[0], r[1], r[2]))
-            objs = ",".join(
-                _wire_json(
-                    {
-                        "topic": r[0],
-                        "partition": r[1],
-                        "offset": r[2],
-                        "key": r[3],
-                        "value": r[4],
-                        "timestamp": r[5],
-                        "timestamp_type": r[6],
-                    }
-                )
-                for r in rows
-            )
-            slice_key = calculate_key(start, self.compression)
-            rel = f"{self.staging}/{tid}__{physical_name(slice_key)}.part"
-            write_bytes(rel, ("[" + objs + "]").encode("utf-8"))
-            parts.append((slice_key, rel))
-        return GuardianWriteCommit(parts)
+        rows = _wire_rows(iterator, self.idx, self.period_us)
+        return GuardianWriteCommit(
+            self._frame(rows, lambda key: f"{tid}__{physical_name(key)}.part")
+        )
 
     # -- driver side ---------------------------------------------------------
-    def _finalize(self, payload: bytes, physical: str) -> bytes:
-        if self.compression != "gzip":
-            return payload
-        buf = io.BytesIO()
-        # filename= replicates the FNAME member header the bulk writer's
-        # GzipFile(fileobj=<real file>) embeds — byte parity requires it
-        inner = physical[:-3] if physical.endswith(".gz") else physical
-        with _gzip.GzipFile(
-            filename=inner, fileobj=buf, mode="wb", compresslevel=self.level, mtime=0
-        ) as gz:
-            gz.write(payload)
-        return buf.getvalue()
-
     def commit(self, messages) -> None:
+        from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime
         from guardian_for_apache_kafka_spark.operators.backup import (
             _ensure_dest_dir,
             physical_name,
         )
         from guardian_for_apache_kafka_spark.operators.restore import list_backup_keys
 
-        write_bytes, read_bytes, move, delete, rmdir = _fs_ops(self.path)
+        _, read_bytes, move, delete, rmdir = _fs_ops(self.path)
         # an empty write to a fresh destination must commit an empty archive,
         # not crash listing a directory no task created (review r6 finding)
         _ensure_dest_dir(self.path)
@@ -680,18 +682,25 @@ class GuardianWriter(DataSourceWriter):
         for slice_key in sorted(by_key):
             rels = sorted(by_key[slice_key])
             phys = physical_name(slice_key)
-            if len(rels) == 1 and self.compression is None:
+            if len(rels) == 1:
                 staged_final = rels[0]
             else:
-                # multi-part slice (input not slice-partitioned) or gzip
-                # framing: merge + re-sort driver-side, slice-sized
+                # multi-part slice (input not slice-partitioned): decode the
+                # staged parts, merge-sort, frame once more — slice-sized
+                start = key_to_datetime(slice_key)
                 recs = []
                 for rel in rels:
-                    recs.extend(json.loads(read_bytes(rel).decode("utf-8")))
+                    blob = read_bytes(rel)
+                    if self.compression == "gzip":
+                        blob = _gzip.decompress(blob)
+                    recs.extend(json.loads(blob.decode("utf-8")))
                 recs.sort(key=lambda r: (r["topic"], r["partition"], r["offset"]))
-                payload = ("[" + ",".join(_wire_json(r) for r in recs) + "]").encode()
-                staged_final = f"{self.staging}/_final__{phys}"
-                write_bytes(staged_final, self._finalize(payload, phys))
+                rows = (
+                    {"slice": start, "topic": r["topic"], "partition": r["partition"],
+                     "offset": r["offset"], "json": _wire_json(r)}
+                    for r in recs
+                )
+                [(_, staged_final)] = self._frame(rows, lambda _key: f"_final__{phys}")
             if self.overwrite and slice_key in existing:
                 aside = f"{self.staging}/_old__{phys}"
                 move(phys, aside)
@@ -721,7 +730,8 @@ class GuardianStreamWriter(DataSourceStreamWriter):
     ``stream_backup``'s text sink produces and ``restore_batch(...,
     fmt="json")`` prunes/reads; the reference's single-object-per-slice
     JSON-array format is inherently rewrite-per-batch and stays the BATCH
-    writer's contract).
+    writer's contract). Gzip parts honour ``compressionLevel`` (1-9,
+    default 6) like every other writer.
 
     Exactly-once discipline: executors stage each (task, slice) part under
     a run-scoped staging dir (write() never sees the batch id — the
@@ -739,72 +749,27 @@ class GuardianStreamWriter(DataSourceStreamWriter):
     checkpoint plays the offset log, this commit plays the terminating
     upload."""
 
-    RECORD_FIELDS = tuple(f.name for f in RECORD_SCHEMA.fields)
-
     def __init__(self, options, schema: StructType):
         import uuid
 
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("guardian datasource requires a path")
-        names = [f.name for f in schema.fields]
-        missing = [f for f in self.RECORD_FIELDS if f not in names]
-        if missing:
-            raise ValueError(
-                f"guardian stream writer needs record columns "
-                f"{self.RECORD_FIELDS}; missing: {missing}"
-            )
-        self.idx = {f: names.index(f) for f in self.RECORD_FIELDS}
-        unit = (options.get("chronounitslice") or "HOURS").upper()
-        if unit not in _CHRONO_SECONDS:
-            raise ValueError(f"unsupported chronoUnitSlice: {unit}")
-        self.period_s = _CHRONO_SECONDS[unit]
-        self.compression = options.get("compression")
-        if self.compression not in (None, "gzip"):
-            raise ValueError(f"unsupported compression: {self.compression}")
+        self.path, self.idx, self.period_us, self.compression, self.level = _writer_options(
+            options, schema
+        )
         self.staging = f"_guardian_stream_staging_{uuid.uuid4().hex}"
 
     # -- executor side -------------------------------------------------------
     def write(self, iterator) -> GuardianWriteCommit:
+        import itertools
         import uuid
 
         write_bytes, *_ = _fs_ops(self.path)
-        ix = self.idx
-        buckets: dict = {}
-        for row in iterator:
-            ts = row[ix["timestamp"]]
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            d = ts - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-            ms = (d.days * 86400 + d.seconds) * 1000 + d.microseconds // 1000
-            start_s = (ms // 1000 // self.period_s) * self.period_s
-            start = _dt.datetime.fromtimestamp(start_s, _dt.timezone.utc)
-            key = row[ix["key"]]
-            val = row[ix["value"]]
-            buckets.setdefault(start, []).append(
-                {
-                    "topic": row[ix["topic"]],
-                    "partition": row[ix["partition"]],
-                    "offset": row[ix["offset"]],
-                    "key": base64.b64encode(bytes(key)).decode() if key is not None else None,
-                    "value": base64.b64encode(bytes(val)).decode() if val is not None else None,
-                    "timestamp": ms,
-                    "timestamp_type": row[ix["timestamp_type"]],
-                }
-            )
         tid = uuid.uuid4().hex
         parts = []
-        for start in sorted(buckets):
-            rows = sorted(
-                buckets[start],
-                key=lambda r: (r["topic"], r["partition"], r["offset"]),
-            )
-            payload = ("\n".join(_wire_json(r) for r in rows) + "\n").encode()
+        rows = _wire_rows(iterator, self.idx, self.period_us)
+        for start, group in itertools.groupby(rows, key=lambda r: r["slice"]):
+            payload = ("\n".join(r["json"] for r in group) + "\n").encode()
             if self.compression == "gzip":
-                buf = io.BytesIO()
-                with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                    gz.write(payload)
-                payload = buf.getvalue()
+                payload = _gzip.compress(payload, self.level, mtime=0)
             slice_val = start.strftime("%Y-%m-%dT%H:%M:%S") + "Z"
             rel = f"{self.staging}/{tid}__{_quote(slice_val)}.part"
             write_bytes(rel, payload)

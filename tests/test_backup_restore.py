@@ -1192,6 +1192,24 @@ def test_guardian_datasource_writer_file_uri_scheme(spark, records, tmp_path):
     # staging dir cleaned up
     assert not [f for f in os.listdir(str(uri_dir)) if f.startswith("_guardian_staging")]
 
+    # gzip: a pyarrow output stream has no .name, so the FNAME member header
+    # must come from the object name, not the stream — both writers, through
+    # file://, write the bare-path reference bytes
+    refz = str(tmp_path / "refz")
+    write_guardian_format(recs, refz, ChronoUnitSlice("HOURS"), compression="gzip")
+    wantz = {f: open(os.path.join(refz, f), "rb").read() for f in sorted(os.listdir(refz))}
+    bulk_dir, ds_dir = tmp_path / "uri_bulkz", tmp_path / "uri_dsz"
+    ds_dir.mkdir()
+    write_guardian_format(
+        recs, f"file://{bulk_dir}", ChronoUnitSlice("HOURS"), compression="gzip"
+    )
+    recs.repartition(4).write.format("guardian").option(
+        "chronoUnitSlice", "hours"
+    ).option("compression", "gzip").mode("append").save(f"file://{ds_dir}")
+    for d in (bulk_dir, ds_dir):
+        got = {f: open(os.path.join(str(d), f), "rb").read() for f in sorted(os.listdir(str(d)))}
+        assert got == wantz, d
+
 
 def test_archive_manifest_empty_archive(spark, records, tmp_path):
     """An empty archive yields an empty manifest (not a reader error), and
@@ -1353,6 +1371,88 @@ def test_guardian_datasource_writer_multipart_gzip_parity(spark, records, tmp_pa
     want = {f: open(os.path.join(ref, f), "rb").read() for f in sorted(os.listdir(ref))}
     got = {f: open(os.path.join(dest, f), "rb").read() for f in sorted(os.listdir(dest))}
     assert got == want
+
+
+def test_guardian_datasource_writer_gzip_slice_partitioned_commit_is_rename_only(
+    spark, records, tmp_path, monkeypatch
+):
+    """Slice-partitioned input with gzip: every task stages finished gzip
+    objects, so commit only renames — it reads no staged bytes — and the
+    archive still equals write_guardian_format's bytes. The commit is driven
+    in-process (the registered DataSource commit runs in a separate Python
+    worker, out of monkeypatch reach)."""
+    from guardian_for_apache_kafka_spark.core.model import RECORD_SCHEMA
+    from guardian_for_apache_kafka_spark.operators.backup import with_slice
+    from guardian_for_apache_kafka_spark.sources import guardian_source as gs
+
+    gs.register_guardian_datasource(spark)
+    recs = records.select(*[f.name for f in RECORD_SCHEMA.fields])
+    ref = str(tmp_path / "refz")
+    write_guardian_format(recs, ref, ChronoUnitSlice("HOURS"), compression="gzip")
+    want = {f: open(os.path.join(ref, f), "rb").read() for f in sorted(os.listdir(ref))}
+
+    pre = with_slice(recs, ChronoUnitSlice("HOURS")).repartition("slice").drop("slice")
+    dest = str(tmp_path / "ds")
+    pre.write.format("guardian").option("chronoUnitSlice", "hours").option(
+        "compression", "gzip"
+    ).mode("append").save(dest)
+    assert {f: open(os.path.join(dest, f), "rb").read() for f in sorted(os.listdir(dest))} == want
+
+    reads = []
+    real_fs_ops = gs._fs_ops
+
+    def spying_fs_ops(path):
+        write_bytes, read_bytes, move, delete, rmdir = real_fs_ops(path)
+
+        def read_spy(rel):
+            reads.append(rel)
+            return read_bytes(rel)
+
+        return write_bytes, read_spy, move, delete, rmdir
+
+    monkeypatch.setattr(gs, "_fs_ops", spying_fs_ops)
+    dest2 = str(tmp_path / "in_process")
+    w = gs.GuardianWriter(
+        {"path": dest2, "chronounitslice": "hours", "compression": "gzip"}, False, RECORD_SCHEMA
+    )
+    msgs = [w.write(iter(part)) for part in pre.rdd.glom().collect()]
+    w.commit(msgs)
+    assert reads == []
+    assert {f: open(os.path.join(dest2, f), "rb").read() for f in sorted(os.listdir(dest2))} == want
+
+
+def test_guardian_datasource_writers_validate_gzip_level(spark, records, tmp_path):
+    """compressionLevel is checked (1-9) when either writer is built, before
+    any task stages a byte, and the stream writer honours it: a level-1 part
+    is exactly gzip.compress(payload, 1, mtime=0)."""
+    from guardian_for_apache_kafka_spark.core.model import RECORD_SCHEMA
+    from guardian_for_apache_kafka_spark.sources import guardian_source as gs
+
+    gs.register_guardian_datasource(spark)
+    for level in ("0", "10"):
+        dest = str(tmp_path / f"lvl{level}")
+        with pytest.raises(Exception, match="gzip level must be 1-9"):
+            records.write.format("guardian").option("compression", "gzip").option(
+                "compressionLevel", level
+            ).mode("append").save(dest)
+        assert not os.path.exists(dest)  # no task staged anything
+        opts = {"path": dest, "compression": "gzip", "compressionlevel": level}
+        with pytest.raises(ValueError, match="gzip level must be 1-9"):
+            gs.GuardianWriter(opts, False, RECORD_SCHEMA)
+        with pytest.raises(ValueError, match="gzip level must be 1-9"):
+            gs.GuardianStreamWriter(opts, RECORD_SCHEMA)
+
+    dest = str(tmp_path / "stream1")
+    w = gs.GuardianStreamWriter(
+        {"path": dest, "chronounitslice": "hours", "compression": "gzip", "compressionlevel": "1"},
+        RECORD_SCHEMA,
+    )
+    rows = records.select(*[f.name for f in RECORD_SCHEMA.fields]).collect()
+    msg = w.write(iter(rows))
+    assert msg.parts
+    for _slice, rel in msg.parts:
+        blob = open(os.path.join(dest, rel), "rb").read()
+        assert blob == gzip.compress(gzip.decompress(blob), 1, mtime=0)
 
 
 def test_null_key_wire_parity_reference_bytes(spark, tmp_path):
