@@ -84,7 +84,7 @@ def _parse_iso_duration_seconds(text: str) -> int:
 
 
 def _parse_from_when(text: str) -> _dt.datetime:
-    return _dt.datetime.fromisoformat(text.replace("Z", "+00:00"))
+    return _dt.datetime.fromisoformat(text)
 
 
 def _parse_override_topics(pairs: list[str]) -> dict[str, str]:

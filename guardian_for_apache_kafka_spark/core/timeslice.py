@@ -156,8 +156,9 @@ def key_to_datetime(key: str) -> _dt.datetime:
     names do not — parsing the full stem first means ``2024-01-01T00:00:00Z``
     (extension-less) and ``...:45.123Z`` (fractional seconds, no extension) both
     parse with their offset intact, while ``.json``/``.gz`` extensions are still
-    consumed one at a time."""
-    stem = key.rsplit("/", 1)[-1]
+    consumed one at a time. A leading ``slice=`` (partition-directory keys) is
+    dropped first."""
+    stem = key.rsplit("/", 1)[-1].removeprefix("slice=")
     while stem:
         try:
             # datetime.fromisoformat handles "Z" and omitted seconds (py>=3.11)
@@ -169,6 +170,12 @@ def key_to_datetime(key: str) -> _dt.datetime:
             break
         stem = stem[:dot]
     raise ValueError(f"not a slice key: {key!r}")
+
+
+def slice_sort_key(key: str) -> tuple[_dt.datetime, str]:
+    """Archive order: slice time, ties broken by name (a slice can hold
+    several objects, e.g. the commit layer's ``.b<batch>`` stream objects)."""
+    return key_to_datetime(key), key
 
 
 def compression_of_key(key: str) -> str | None:

@@ -52,7 +52,7 @@ import json
 import os
 import uuid
 
-from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime
+from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime, slice_sort_key
 from guardian_for_apache_kafka_spark.operators.backup import physical_name
 
 LOG_DIR = "_guardian_log"
@@ -136,7 +136,7 @@ def commit(
     for a in actions:
         if a.get("op") not in ("add", "remove"):
             raise ValueError(f"action op must be add|remove: {a}")
-        key_to_datetime(a["key"].removeprefix("slice="))  # malformed key = loud
+        key_to_datetime(a["key"])  # malformed key = loud
     log_dir = _log_path(dest)
     os.makedirs(log_dir, exist_ok=True)
     versions = list_versions(dest)
@@ -262,18 +262,13 @@ def snapshot(
 def snapshot_keys(dest: str, version: int | None = None) -> list[str]:
     """Live logical keys at a version, sorted by slice time (the commit-log
     replacement for `restore.list_backup_keys`'s directory listing)."""
-    files = snapshot(dest, version)["files"]
-    return sorted(
-        files,
-        key=lambda k: (key_to_datetime(k.removeprefix("slice=")), k),
-    )
+    return sorted(snapshot(dest, version)["files"], key=slice_sort_key)
 
 
-def ensure_snapshot_objects_present(
-    dest: str, keys, version: int | None = None
-) -> None:
-    """Planning-time guard shared by every snapshot reader (the guardian
-    DataSource and `restore.restore_batch`): raise a vacuum diagnosis if any
+def ensure_snapshot_objects_present(dest: str, keys, version: int) -> None:
+    """Planning-time guard of every snapshot read, called only by
+    `restore.plan_restore_keys` (the planner behind `restore.restore_batch`
+    and the guardian DataSource): raise a vacuum diagnosis if any
     referenced object's bytes are gone, instead of letting the job die
     mid-flight in an executor with a bare FileNotFoundError (easily mistaken
     for transient storage flake). Slice-count-bounded stat() calls; handles
@@ -285,9 +280,8 @@ def ensure_snapshot_objects_present(
         if not os.path.exists(os.path.join(root, physical_name(k)))
     ]
     if missing:
-        shown = "latest" if version is None else version
         raise ValueError(
-            f"snapshot read at version {shown} references {len(missing)} "
+            f"snapshot read at version {version} references {len(missing)} "
             "object(s) removed by vacuum() (first: "
             f"{physical_name(missing[0])!r}); this version's log entries "
             "remain as the audit record but its files are gone — re-read at "
@@ -339,7 +333,7 @@ def committed_backup(
     # evaluation of `records` — the stats describe the written bytes by
     # construction). The census lets committed_merge_slices PLAN without
     # scanning; the offset ranges let snapshot reads SKIP whole objects
-    # against pushed offset predicates (guardian_source.partitions) — the
+    # against pushed topic/offset predicates (restore.plan_restore_keys) — the
     # object-level analogue of parquet row-group stats, stored in the
     # commit log instead of a sidecar.
     keys, stats = write_guardian_format(
@@ -449,7 +443,7 @@ def committed_retention(
     physical delete, which destroys history)."""
     dropped = [
         k for k in snapshot_keys(dest)
-        if key_to_datetime(k.removeprefix("slice=")) < cutoff
+        if key_to_datetime(k) < cutoff
     ]
     actions = [{"op": "remove", "key": k} for k in dropped]
     return commit(dest, actions, "retention", expected_version=expected_version)
@@ -498,7 +492,7 @@ def committed_merge_slices(
     from guardian_for_apache_kafka_spark.core.model import record_to_json_col
 
     snap = snapshot(dest)
-    keys = snapshot_keys(dest, snap["version"])
+    keys = sorted(snap["files"], key=slice_sort_key)
     groups: list[list[str]] = []
     cur: list[str] = []
     acc = 0
@@ -520,7 +514,7 @@ def committed_merge_slices(
             continue
         merged = None
         for grp in plan:
-            first = key_to_datetime(grp[0].removeprefix("slice="))
+            first = key_to_datetime(grp[0])
             part = read_guardian_files(
                 spark, [os.path.join(root, physical_name(k)) for k in grp]
             ).withColumn("slice", F.lit(first))
@@ -556,7 +550,7 @@ def vacuum(dest: str, retain_versions: int = 1, orphans: bool = False) -> list[s
     """PHYSICAL delete of objects referenced by no retained snapshot. Keeps
     the newest ``retain_versions`` versions readable; older versions stop
     time-traveling (a snapshot read that references a deleted object fails
-    at planning time with a vacuum diagnosis — guardian_source.partitions)
+    at planning time with a vacuum diagnosis — restore.plan_restore_keys)
     but their log entries remain as the audit record. Returns deleted
     physical names.
 
@@ -625,7 +619,7 @@ def version_at_timestamp(dest: str, ts) -> int:
     ``timestampAsOf`` semantics, resolved from the commits' ``committed_at``
     wall-clock stamps. Raises if the earliest commit is later than ``ts``."""
     if isinstance(ts, str):
-        ts = _dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
+        ts = _dt.datetime.fromisoformat(ts)
     if ts.tzinfo is None:
         ts = ts.replace(tzinfo=_dt.timezone.utc)
     best = None

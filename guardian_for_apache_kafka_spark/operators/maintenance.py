@@ -34,11 +34,7 @@ import datetime as _dt
 
 from pyspark.sql import SparkSession
 
-
-def _slice_time(key: str) -> _dt.datetime:
-    from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime
-
-    return key_to_datetime(key[len("slice=") :] if key.startswith("slice=") else key)
+from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime
 
 
 def describe_archive(spark: SparkSession, dest: str, instances: bool = False) -> "DataFrame":
@@ -98,7 +94,7 @@ def describe_archive(spark: SparkSession, dest: str, instances: bool = False) ->
             if not str(f.getPath().getName()).startswith(("_", "."))
         ]
         value = _url.unquote(physical[len("slice=") :])
-        rows.append((value, _slice_time(value), len(files), sum(f.getLen() for f in files)))
+        rows.append((value, key_to_datetime(value), len(files), sum(f.getLen() for f in files)))
     if not rows:
         from guardian_for_apache_kafka_spark.operators.backup import logical_name
 
@@ -108,7 +104,7 @@ def describe_archive(spark: SparkSession, dest: str, instances: bool = False) ->
             if not status.isFile() or name.startswith(("_", ".")):
                 continue
             try:
-                _slice_time(logical_name(name))  # ':' stored as '_' on disk
+                key_to_datetime(logical_name(name))  # ':' stored as '_' on disk
             except Exception:
                 continue
             gfiles.append((logical_name(name), str(status.getPath()), status.getLen()))
@@ -250,7 +246,7 @@ def compact_archive_slices(
         # on-disk partition dirs are URL-encoded; keys are logical
         value = _url.unquote(physical[len("slice=") :])
         key = "slice=" + value
-        if before is not None and _slice_time(key) >= before:
+        if before is not None and key_to_datetime(key) >= before:
             continue
         if not status.isDirectory():
             continue
@@ -487,8 +483,8 @@ def plan_retention(spark: SparkSession, dest: str, cutoff) -> "DataFrame":
     verdicts = [
         (
             r["slice"],
-            _slice_time(r["slice"]).replace(tzinfo=None),
-            _slice_time(r["slice"]).replace(tzinfo=None) < cutoff,
+            key_to_datetime(r["slice"]).replace(tzinfo=None),
+            key_to_datetime(r["slice"]).replace(tzinfo=None) < cutoff,
         )
         for r in desc.select("slice").collect()
     ]
@@ -597,10 +593,7 @@ def verify_archive(
 
     from pyspark.sql import functions as F
 
-    from guardian_for_apache_kafka_spark.core.timeslice import (
-        key_to_datetime,
-        slice_col,
-    )
+    from guardian_for_apache_kafka_spark.core.timeslice import slice_col
     from guardian_for_apache_kafka_spark.operators.restore import list_backup_keys
 
     expected = (
@@ -788,7 +781,7 @@ def archive_gap_report(spark: SparkSession, dest: str, step_minutes: int = 60) -
     from guardian_for_apache_kafka_spark.operators.restore import list_backup_keys
 
     keys = list_backup_keys(dest, spark)
-    times = [(_slice_time(k).replace(tzinfo=None),) for k in keys]
+    times = [(key_to_datetime(k).replace(tzinfo=None),) for k in keys]
     if not times:
         raise ValueError(f"no slice keys under {dest}")
     present = spark.createDataFrame(times, "h timestamp").distinct()

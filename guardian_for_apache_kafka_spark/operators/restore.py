@@ -18,6 +18,10 @@ Scale note: the reference materializes the full key list in driver memory
 values* (one per slice, bounded by time-range/period) ever reach the driver;
 record data flows executor-side. On the engine-native layout pruning is
 partition pruning Catalyst applies from a ``slice >=`` predicate.
+
+``plan_restore_keys`` is the one archive read planner: ``restore_batch`` and
+the ``guardian`` DataSource readers (sources/guardian_source.py) both decide
+which objects to open through it, listing or commit-log snapshot alike.
 """
 
 from __future__ import annotations
@@ -31,9 +35,11 @@ from pyspark.sql import functions as F
 
 from guardian_for_apache_kafka_spark.core.model import (
     RECORD_JSON_SCHEMA_DDL,
+    RECORD_SCHEMA,
     parsed_json_to_record_cols,
 )
-from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime
+from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime, slice_sort_key
+from guardian_for_apache_kafka_spark.operators import commitlog
 from guardian_for_apache_kafka_spark.operators.backup import logical_name, physical_name
 
 
@@ -74,23 +80,19 @@ def list_backup_keys(dest: str, spark: SparkSession | None = None) -> list[str]:
     Hadoop FS API (object-store URIs)."""
     names = []
     for n in _list_names(dest, spark):
-        if n.startswith("_") or n.startswith("."):
+        if n.startswith(("_", ".")):
             continue
         if n.startswith("slice="):
             n = "slice=" + _urlparse.unquote(n[len("slice=") :])
-            stem = n[len("slice=") :]
         else:
             n = logical_name(n)
-            stem = n
         try:
-            names.append((key_to_datetime(stem), n))
+            # the name tie-break keeps multi-object slices in a fixed order,
+            # not the filesystem's listing order
+            names.append(slice_sort_key(n))
         except ValueError:
             continue
-    # tie-break by name: slices can hold SEVERAL objects (the commit layer's
-    # .b<batch> stream objects), and a time-only sort would order ties by
-    # directory-listing order — nondeterministic across filesystems
-    names.sort(key=lambda p: (p[0], p[1]))
-    return [n for _, n in names]
+    return [n for _, n in sorted(names)]
 
 
 def prune_keys_from_when(keys: list[str], from_when: _dt.datetime) -> list[str]:
@@ -112,7 +114,7 @@ def prune_keys_from_when(keys: list[str], from_when: _dt.datetime) -> list[str]:
         # slice keys parse tz-aware (ISO offset); interpret naive cutoffs as
         # UTC — the reference's epoch-millis-as-UTC convention
         from_when = from_when.replace(tzinfo=_dt.timezone.utc)
-    times = [key_to_datetime(k[len("slice=") :] if k.startswith("slice=") else k) for k in keys]
+    times = [key_to_datetime(k) for k in keys]
     idx = next((i for i, t in enumerate(times) if t >= from_when), None)
     if idx is None:
         straddle_t = times[-1]
@@ -122,6 +124,77 @@ def prune_keys_from_when(keys: list[str], from_when: _dt.datetime) -> list[str]:
         straddle_t = times[idx - 1]
     first = next(i for i, t in enumerate(times) if t == straddle_t)
     return keys[first:]
+
+
+def zone_map_may_match(
+    ranges: dict | None,
+    topics: set | None,
+    off_lo: int | None,
+    off_hi: int | None,
+) -> bool:
+    """Object-skip decision for commit-log zone maps: False ONLY when the
+    recorded per-(topic, partition) offset ranges PROVE no row can satisfy
+    the pushed topic set and inclusive offset window. Missing or empty
+    ranges keep the object (stale-safety) — soundness over completeness."""
+    if not ranges:
+        return True
+    for tp, (lo, hi) in ranges.items():
+        if topics is not None and tp.rsplit("/", 1)[0] not in topics:
+            continue
+        if off_lo is not None and hi < off_lo:
+            continue
+        if off_hi is not None and lo > off_hi:
+            continue
+        return True
+    return False
+
+
+def plan_restore_keys(
+    dest: str,
+    from_when: _dt.datetime | None = None,
+    *,
+    snapshot: bool = False,
+    version: int | None = None,
+    topics: set[str] | None = None,
+    offsets: tuple[int | None, int | None] = (None, None),
+    spark: SparkSession | None = None,
+) -> list[str]:
+    """The archive objects a restore opens, in slice order — the one read
+    planner behind ``restore_batch`` and the guardian DataSource readers:
+
+    1. list ``dest`` (through the Hadoop FS API when ``spark`` is given) or,
+       with ``snapshot=True`` / ``version=N``, fold the commit log once at
+       that version (default: latest) — orphans stay invisible;
+    2. sort by slice time;
+    3. R3-prune from ``from_when`` (``prune_keys_from_when``);
+    4. snapshot reads only: skip objects whose commit-log offset zone maps
+       prove no row matches ``topics`` and the inclusive ``offsets`` window
+       (``zone_map_may_match``; callers still filter the rows);
+    5. snapshot reads only: fail with a vacuum diagnosis if a kept object's
+       bytes are gone at the pinned version.
+    """
+    if not snapshot and version is None:
+        keys = list_backup_keys(dest, spark)
+        return keys if from_when is None else prune_keys_from_when(keys, from_when)
+    snap = commitlog.snapshot(dest, version)
+    files = snap["files"]
+    keys = sorted(files, key=slice_sort_key)
+    if from_when is not None:
+        keys = prune_keys_from_when(keys, from_when)
+    keys = [k for k in keys if zone_map_may_match(files[k].get("offsets"), topics, *offsets)]
+    commitlog.ensure_snapshot_objects_present(dest, keys, snap["version"])
+    return keys
+
+
+def _straddle_bound(
+    spark: SparkSession, roots: list[str], from_when: _dt.datetime
+) -> _dt.datetime | None:
+    """Lower bound on the ``slice`` partition value a ``from_when`` restore
+    must scan: the earliest root's straddle slice. Taking the min over
+    multi-instance roots is conservative (every root shares the cutoff) but
+    still prunes every slice older than the earliest straddler."""
+    plans = [plan_restore_keys(root, from_when, spark=spark) for root in roots]
+    return min((key_to_datetime(keys[0]) for keys in plans if keys), default=None)
 
 
 def read_guardian_files(spark: SparkSession, paths: list[str] | str) -> DataFrame:
@@ -266,72 +339,46 @@ def restore_batch(
 ) -> DataFrame:
     """Full restore read: prune slices (R3), parse (R4/R5), filter records (R6).
 
-    fmt="guardian": reference-format array files; fmt="json": engine-native
-    partitioned JSON-lines (pruning via the slice partition column predicate —
-    Catalyst partition pruning, the scan never opens pruned directories).
-    ``instances=True`` (json only): per-instance roots under ``source``
-    (the concurrent-backup layout); the straddle lower bound still prunes —
-    it is conservative per instance since every instance shares the cutoff.
+    fmt="guardian": reference-format array files, planned by
+    ``plan_restore_keys``. fmt="json"/"parquet"/"orc": engine-native
+    partitioned archives (pruning via a ``slice >=`` straddle-bound
+    predicate — Catalyst partition pruning, the scan never opens pruned
+    directories). ``instances=True`` (json only): per-instance roots under
+    ``source`` (the concurrent-backup layout).
 
     ``snapshot=True`` / ``version=N`` (guardian format, commit-log archives —
     operators/commitlog): restore from a pinned committed snapshot instead of
     the directory listing — a crashed writer's orphans stay invisible, a
-    concurrent commit cannot change the object set mid-restore, and
-    ``version`` makes the restore point-in-time (the bulk-path twin of the
-    DataSource's ``versionAsOf`` read).
+    concurrent commit cannot change the object set mid-restore, ``version``
+    makes the restore point-in-time (the bulk-path twin of the DataSource's
+    ``versionAsOf`` read), and ``topics`` also skips whole objects by the
+    commit log's zone maps.
+
+    A guardian archive with no object to read restores to an empty
+    ``RECORD_SCHEMA`` frame.
     """
     if (snapshot or version is not None) and fmt != "guardian":
         raise ValueError("snapshot/version restore requires fmt='guardian'")
+    if instances and fmt != "json":
+        raise ValueError("instances=True requires fmt='json'")
     if fmt == "guardian":
-        if instances:
-            raise ValueError("instances=True requires fmt='json'")
-        if snapshot or version is not None:
-            from guardian_for_apache_kafka_spark.operators.commitlog import (
-                ensure_snapshot_objects_present,
-                snapshot_keys,
-            )
-
-            keys = snapshot_keys(source, version)
-            if from_when is not None:
-                keys = prune_keys_from_when(keys, from_when)
-            # same planning-time vacuum diagnosis as the DataSource path —
-            # never a bare executor FileNotFoundError on a vacuumed version
-            ensure_snapshot_objects_present(source, keys, version)
-        else:
-            keys = list_backup_keys(source, spark)
-            if from_when is not None:
-                keys = prune_keys_from_when(keys, from_when)
+        keys = plan_restore_keys(
+            source, from_when, snapshot=snapshot, version=version, topics=topics, spark=spark
+        )
         if not keys:
-            return spark.createDataFrame([], schema="topic string")
+            return spark.createDataFrame([], RECORD_SCHEMA)
         records = read_guardian_files(spark, [os.path.join(source, physical_name(k)) for k in keys])
-    elif fmt == "json":
-        records = read_backup_jsonl(spark, source, instances=instances)
+    elif fmt in ("json", "parquet", "orc"):
+        # the -1-slice straddle is handled record-exact by the timestamp
+        # filter below; partition pruning needs only a lower bound
+        if fmt == "json":
+            records = read_backup_jsonl(spark, source, instances=instances)
+        else:
+            records = getattr(spark.read, fmt)(source)
         if from_when is not None:
-            # -1-slice straddle handled record-exact by the timestamp filter;
-            # partition pruning needs only a lower bound on the slice value.
-            # Multi-instance archives take the min of the per-root straddle
-            # bounds — conservative (every root shares the cutoff) but still
-            # prunes every slice older than the earliest straddler.
             roots = instance_roots(spark, source) if instances else [source]
-            bounds = []
-            for root in roots:
-                keys = prune_keys_from_when(list_backup_keys(root, spark), from_when)
-                if keys:
-                    bounds.append(key_to_datetime(keys[0][len("slice=") :]))
-            if bounds:
-                records = records.where(F.col("slice") >= F.lit(min(bounds)))
-        records = records.drop("slice")
-    elif fmt in ("parquet", "orc"):
-        # columnar archives (backup_batch fmt="parquet"/"orc"): the slice
-        # partition column prunes directories exactly like the JSON-lines
-        # path — same straddle rule, expressed on the slice string value
-        if instances:
-            raise ValueError("instances=True requires fmt='json'")
-        records = getattr(spark.read, fmt)(source)
-        if from_when is not None:
-            keys = prune_keys_from_when(list_backup_keys(source, spark), from_when)
-            if keys:
-                bound = key_to_datetime(keys[0][len("slice="):])
+            bound = _straddle_bound(spark, roots, from_when)
+            if bound is not None:
                 records = records.where(F.col("slice") >= F.lit(bound))
         records = records.drop("slice")
     else:

@@ -9765,7 +9765,7 @@ def g19(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("guardian", "lakehouse", "zonemap"),
 )
 def g20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Commit-log offset-zone-map skip plan (sources/guardian_source.
+    """Commit-log offset-zone-map skip plan (operators/restore.
     zone_map_may_match over operators/commitlog.committed_backup's
     per-(topic, partition) min/max-offset stats), as a relational query
     the oracle can replay exactly: for the canonical one-object-per-hour

@@ -22,6 +22,11 @@ native source with:
   object-level analogue of parquet row-group stats, with stale-safety
   (stat-less objects always scan).
 
+Both readers plan their objects (listing or snapshot fold, slice-time sort,
+fromWhen pruning, zone-map skip, vacuum check) through
+``operators/restore.plan_restore_keys``, the planner ``restore_batch`` uses,
+so the bulk and DataSource restores open the same objects by construction.
+
 This is the INTEGRATION surface — schema, partitioning and pushdown for
 ad-hoc SQL over archives. The JVM-side ``operators/restore.py`` paths
 remain the bulk-restore hot path (whole-file text scan + ``from_json``,
@@ -67,27 +72,20 @@ class GuardianObjectPartition(InputPartition):
         self.path = path
 
 
-def zone_map_may_match(
-    ranges: dict | None,
-    topics: set | None,
-    off_lo: int | None,
-    off_hi: int | None,
-) -> bool:
-    """Object-skip decision for commit-log zone maps: False ONLY when the
-    recorded per-(topic, partition) offset ranges PROVE no row can satisfy
-    the pushed topic set and inclusive offset window. Missing or empty
-    ranges keep the object (stale-safety) — soundness over completeness."""
-    if not ranges:
-        return True
-    for tp, (lo, hi) in ranges.items():
-        if topics is not None and tp.rsplit("/", 1)[0] not in topics:
-            continue
-        if off_lo is not None and hi < off_lo:
-            continue
-        if off_hi is not None and lo > off_hi:
-            continue
-        return True
-    return False
+def _from_when(options) -> _dt.datetime | None:
+    """The ``fromWhen`` option (ISO-8601) as a datetime; options arrive
+    lowercased."""
+    text = options.get("fromwhen")
+    return _dt.datetime.fromisoformat(text) if text else None
+
+
+def _object_partitions(path: str, keys: list[str]) -> list[GuardianObjectPartition]:
+    """One input partition per planned archive object."""
+    import os
+
+    from guardian_for_apache_kafka_spark.operators.backup import physical_name
+
+    return [GuardianObjectPartition(os.path.join(path, physical_name(k))) for k in keys]
 
 
 def _open_bytes(path: str) -> bytes:
@@ -110,7 +108,7 @@ class GuardianReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("guardian datasource requires a path")
-        self.from_when = options.get("fromwhen")  # options arrive lowercased
+        self.from_when = _from_when(options)
         self.use_zonemap = (options.get("zonemap") or "").lower() in ("true", "1")
         # snapshot isolation / time travel (operators/commitlog): pin the
         # object set to a committed version AT PLAN TIME — concurrent
@@ -119,6 +117,9 @@ class GuardianReader(DataSourceReader):
         vaso = options.get("versionasof")
         self.version_as_of = int(vaso) if vaso is not None else None
         self.ts_as_of = options.get("timestampasof")  # ISO; resolved at plan time
+        if self.version_as_of is not None and self.ts_as_of:
+            # Delta rejects the pair too: neither option may silently win
+            raise ValueError("versionAsOf and timestampAsOf are mutually exclusive")
         self.topics: set[str] | None = None
         self.require_key = False
         # inclusive offset window accumulated from pushed comparisons; used
@@ -173,43 +174,18 @@ class GuardianReader(DataSourceReader):
                 yield f  # not consumed — Spark applies it post-scan
 
     def partitions(self) -> Sequence[GuardianObjectPartition]:
-        # planning-time listing + R3 pruning; the key list is slice-count
-        # bounded (same driver cost as the reference's restore listing)
-        import os
+        # planning-time listing (or snapshot fold) + R3 pruning + commit-log
+        # zone-map skip + vacuum check, all in the shared restore planner
+        from guardian_for_apache_kafka_spark.operators.commitlog import version_at_timestamp
+        from guardian_for_apache_kafka_spark.operators.restore import plan_restore_keys
 
-        from guardian_for_apache_kafka_spark.operators.backup import physical_name
-        from guardian_for_apache_kafka_spark.operators.restore import (
-            list_backup_keys,
-            prune_keys_from_when,
+        version = self.version_as_of
+        if self.ts_as_of:
+            version = version_at_timestamp(self.path, self.ts_as_of)
+        keys = plan_restore_keys(
+            self.path, self.from_when, snapshot=self.use_snapshot, version=version,
+            topics=self.topics, offsets=(self.off_lo, self.off_hi),
         )
-
-        pinned_version = None
-        snap_meta: dict | None = None
-        if self.use_snapshot or self.version_as_of is not None or self.ts_as_of:
-            from guardian_for_apache_kafka_spark.core.timeslice import (
-                key_to_datetime,
-            )
-            from guardian_for_apache_kafka_spark.operators.commitlog import (
-                snapshot,
-                version_at_timestamp,
-            )
-
-            version = self.version_as_of
-            if version is None and self.ts_as_of:
-                version = version_at_timestamp(self.path, self.ts_as_of)
-            snap = snapshot(self.path, version)
-            pinned_version = snap["version"]
-            snap_meta = snap["files"]
-            # snapshot_keys' slice-time ordering, from the already-folded map
-            keys = sorted(
-                snap_meta,
-                key=lambda k: (key_to_datetime(k.removeprefix("slice=")), k),
-            )
-        else:
-            keys = list_backup_keys(self.path)
-        if self.from_when:
-            cut = _dt.datetime.fromisoformat(self.from_when.replace("Z", "+00:00"))
-            keys = prune_keys_from_when(keys, cut)
         if self.use_zonemap and self.topics is not None:
             # topic zone-map pruning (.option("zonemap", "true")): skip whole
             # objects whose recorded topic set misses every pushed topic —
@@ -218,7 +194,6 @@ class GuardianReader(DataSourceReader):
             # the operator rebuilds it after writes
             # (operators/maintenance.write_topic_zonemap); a missing map is
             # a no-op, a present one must cover every key it prunes.
-            import json as _json
             import re as _re
 
             from guardian_for_apache_kafka_spark.operators.maintenance import (
@@ -230,7 +205,7 @@ class GuardianReader(DataSourceReader):
             except (FileNotFoundError, OSError):
                 blob = None
             if blob is not None:
-                slices = _json.loads(blob.decode("utf-8"))["slices"]
+                slices = json.loads(blob.decode("utf-8"))["slices"]
                 kept = []
                 for k in keys:
                     stem = _re.sub(r"\.json(\.gz)?$", "", k)
@@ -238,39 +213,7 @@ class GuardianReader(DataSourceReader):
                     if topics is None or set(topics) & self.topics:
                         kept.append(k)  # unknown slices stay (stale-map safety)
                 keys = kept
-        if snap_meta is not None and (
-            self.off_lo is not None
-            or self.off_hi is not None
-            or self.topics is not None
-        ):
-            # commit-log zone-map skipping: each backup/compact commit records
-            # per-(topic, partition) min/max offsets for its objects
-            # (operators/commitlog.committed_backup) — the object-level
-            # analogue of parquet row-group stats. An object is skipped only
-            # when its recorded ranges PROVE no row can satisfy the pushed
-            # topic set and offset window; objects without recorded stats
-            # (converted logs, pre-stats commits) always stay.
-            keys = [
-                k for k in keys
-                if zone_map_may_match(
-                    (snap_meta.get(k) or {}).get("offsets"),
-                    self.topics, self.off_lo, self.off_hi,
-                )
-            ]
-        if snap_meta is not None:
-            # Fail at PLANNING time with a vacuum diagnosis if this snapshot
-            # references deleted objects (zone-map-skipped objects are
-            # exempt — never opened, so their bytes may be legitimately
-            # vacuumed). Shared guard handles bare and file:// paths.
-            from guardian_for_apache_kafka_spark.operators.commitlog import (
-                ensure_snapshot_objects_present,
-            )
-
-            ensure_snapshot_objects_present(self.path, keys, pinned_version)
-        return [
-            GuardianObjectPartition(os.path.join(self.path, physical_name(k)))
-            for k in keys
-        ]
+        return _object_partitions(self.path, keys)
 
     def read(self, partition: GuardianObjectPartition) -> Iterator[tuple]:
         blob = _open_bytes(partition.path)
@@ -355,13 +298,13 @@ class GuardianStreamReader(DataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("guardian datasource requires a path")
-        self.from_when = options.get("fromwhen")
+        self.from_when = _from_when(options)
         self._listed: list[str] = []
 
     def _keys(self) -> list[str]:
-        from guardian_for_apache_kafka_spark.operators.restore import list_backup_keys
+        from guardian_for_apache_kafka_spark.operators.restore import plan_restore_keys
 
-        self._listed = list_backup_keys(self.path)
+        self._listed = plan_restore_keys(self.path)
         return self._listed
 
     def initialOffset(self) -> dict:
@@ -374,27 +317,17 @@ class GuardianStreamReader(DataSourceStreamReader):
         )
 
         keys = self._keys()
-        cut = _dt.datetime.fromisoformat(self.from_when.replace("Z", "+00:00"))
-        kept = prune_keys_from_when(keys, cut)
-        return {"consumed": len(keys) - len(kept)}
+        return {"consumed": len(keys) - len(prune_keys_from_when(keys, self.from_when))}
 
     def latestOffset(self) -> dict:
         # monotone by construction: keys only ever append in time order
         return {"consumed": len(self._keys())}
 
     def partitions(self, start: dict, end: dict) -> Sequence[GuardianObjectPartition]:
-        import os
-
-        from guardian_for_apache_kafka_spark.operators.backup import physical_name
-
         # reuse the listing latestOffset() just took for this batch; relist
         # only if this end outruns it (e.g. replay after restart)
         keys = self._listed if len(self._listed) >= end["consumed"] else self._keys()
-        keys = keys[start["consumed"]:end["consumed"]]
-        return [
-            GuardianObjectPartition(os.path.join(self.path, physical_name(k)))
-            for k in keys
-        ]
+        return _object_partitions(self.path, keys[start["consumed"]:end["consumed"]])
 
     def read(self, partition: GuardianObjectPartition) -> Iterator[tuple]:
         return GuardianReader({"path": self.path}).read(partition)

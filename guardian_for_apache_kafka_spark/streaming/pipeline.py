@@ -219,7 +219,8 @@ def stream_restore(
     (its restore floods the producer as fast as S3 downloads arrive). Route
     the result to write_records_to_kafka for a paced point-in-time replay, or
     any sink for ETL re-processing. Record-exact filters match restore_batch
-    (R6); slice-level pruning happens via the partition column predicate.
+    (R6), but no slice is pruned: the file stream reads every ``slice=``
+    directory and ``from_when`` only filters records.
     Multi-instance archives: run one streaming restore per instance root
     (partition discovery forbids the intermediate instance directory under
     one basePath) — the per-root queries are independent and their sinks

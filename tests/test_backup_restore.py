@@ -247,20 +247,38 @@ def test_compact_archive_slices_preserves_records(spark, tmp_path):
 
 def test_restore_edge_cases_empty_and_future_cutoff(spark, tmp_path):
     """Empty archive -> empty result; cutoff after all data -> only the
-    straddling last slice is scanned and the record filter empties it."""
+    straddling last slice is scanned and the record filter empties it.
+    Nothing to read (an empty directory, or a committed archive whose
+    snapshot retention emptied) still restores to the record schema, so
+    compaction downstream runs on it."""
     import datetime as dt
 
     from guardian_for_apache_kafka_spark.core import normalize_events_to_records
+    from guardian_for_apache_kafka_spark.core.model import RECORD_SCHEMA
     from guardian_for_apache_kafka_spark.core.timeslice import ChronoUnitSlice
     from guardian_for_apache_kafka_spark.operators.backup import write_guardian_format
+    from guardian_for_apache_kafka_spark.operators.commitlog import (
+        committed_backup,
+        committed_retention,
+    )
     from guardian_for_apache_kafka_spark.operators.restore import restore_batch
     from guardian_for_apache_kafka_spark.sources.tables import load_table
+
+    def assert_empty_records(df):
+        assert df.schema == RECORD_SCHEMA
+        assert compact_latest_by_key(df).count() == 0
 
     empty_dir = str(tmp_path / "empty")
     os.makedirs(empty_dir)
     assert restore_batch(spark, empty_dir, fmt="guardian").count() == 0
+    assert_empty_records(restore_batch(spark, empty_dir, fmt="guardian"))
 
     records = normalize_events_to_records(load_table(spark, "/root/testdata/sf0.001", "events"))
+    committed = str(tmp_path / "committed")
+    committed_backup(records, committed, ChronoUnitSlice("DAYS"))
+    committed_retention(committed, dt.datetime(2100, 1, 1, tzinfo=dt.timezone.utc))
+    assert_empty_records(restore_batch(spark, committed, fmt="guardian", snapshot=True))
+
     archive = str(tmp_path / "archive")
     write_guardian_format(records, archive, ChronoUnitSlice("DAYS"))
     future = dt.datetime(2030, 1, 1)
@@ -1011,6 +1029,36 @@ def test_guardian_streaming_datasource(spark, records, tmp_path):
     got2 = as_set(spark.read.parquet(out))
     assert got2 == as_set(restore_batch(spark, dest, fmt="guardian"))
     assert len(got2) > len(got1)
+
+
+def test_guardian_streaming_datasource_from_when(spark, records, tmp_path):
+    """readStream.format('guardian') with fromWhen starts behind the pruned
+    prefix: an availableNow replay equals the batch DataSource read with the
+    same option (straddle slice included, no record filter on either)."""
+    from guardian_for_apache_kafka_spark.operators.backup import write_guardian_format
+    from guardian_for_apache_kafka_spark.sources.guardian_source import (
+        register_guardian_datasource,
+    )
+
+    dest = str(tmp_path / "arch")
+    out = str(tmp_path / "out")
+    write_guardian_format(records, dest, ChronoUnitSlice("HOURS"))
+    register_guardian_datasource(spark)
+    mid = records.selectExpr("percentile(unix_micros(timestamp), 0.5D) p").collect()[0].p
+    cut = dt.datetime.fromtimestamp(int(mid) / 1e6, dt.timezone.utc).isoformat()
+
+    q = (
+        spark.readStream.format("guardian").option("fromWhen", cut).load(dest)
+        .writeStream.foreachBatch(lambda df, _: df.write.mode("append").parquet(out))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = as_set(spark.read.parquet(out))
+    want = as_set(spark.read.format("guardian").option("fromWhen", cut).load(dest))
+    assert got == want
+    assert 0 < len(got) < records.count()
 
 
 def test_guardian_datasource_filter_conjunction_and_corrupt_skip(spark, records, tmp_path):

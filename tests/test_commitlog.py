@@ -566,9 +566,7 @@ def test_zone_map_skip_is_sound_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from guardian_for_apache_kafka_spark.sources.guardian_source import (
-        zone_map_may_match,
-    )
+    from guardian_for_apache_kafka_spark.operators.restore import zone_map_may_match
 
     rows_st = st.lists(
         st.tuples(
@@ -725,3 +723,97 @@ def test_remote_scheme_commit_log_is_loud(tmp_path):
     for fn in (_versions, _snapshot, _vacuum):
         with pytest.raises(NotImplementedError):
             fn("s3a://bucket/archive")
+
+
+def test_restore_batch_and_datasource_plan_the_same_objects(spark, records, tmp_path):
+    """Both restore readers plan through plan_restore_keys: with an orphan
+    object and a mid-slice cutoff, the bulk snapshot restore and the
+    DataSource snapshot read return the same rows, and the planner returns
+    exactly the objects GuardianReader.partitions plans."""
+    import shutil
+
+    from pyspark.sql.datasource import In
+
+    from guardian_for_apache_kafka_spark.operators.restore import plan_restore_keys
+    from guardian_for_apache_kafka_spark.sources.guardian_source import (
+        GuardianReader,
+        register_guardian_datasource,
+    )
+
+    dest = str(tmp_path / "pp")
+    committed_backup(records, dest, ChronoUnitSlice("HOURS"))
+    keys = snapshot_keys(dest)
+    orphan = "2030-01-01T00:00:00Z.json"
+    shutil.copy(
+        os.path.join(dest, physical_name(keys[-1])),
+        os.path.join(dest, physical_name(orphan)),
+    )
+    cut = dt.datetime.fromisoformat(keys[len(keys) // 2].split(".json")[0])
+    cut += dt.timedelta(minutes=30)
+    topics = {sorted(r.topic for r in records.select("topic").distinct().collect())[0]}
+
+    bulk = restore_batch(spark, dest, snapshot=True, from_when=cut, topics=topics)
+    register_guardian_datasource(spark)
+    via_ds = (
+        spark.read.format("guardian").option("snapshot", "true")
+        .option("fromWhen", cut.isoformat()).load(dest)
+        .where(F.col("topic").isin(*topics))
+        .where(F.col("timestamp") >= F.lit(cut))
+    )
+    want = {
+        t for t in as_set(records)
+        if t[0] in topics and t[5] >= cut.replace(tzinfo=None)
+    }
+    assert want and as_set(bulk) == as_set(via_ds) == want
+
+    planned = plan_restore_keys(dest, cut, snapshot=True, topics=topics)
+    assert orphan not in planned and 0 < len(planned) < len(keys)
+    r = GuardianReader({"path": dest, "snapshot": "true", "fromwhen": cut.isoformat()})
+    list(r.pushFilters([In(("topic",), tuple(topics))]))
+    assert [p.path for p in r.partitions()] == [
+        os.path.join(dest, physical_name(k)) for k in planned
+    ]
+
+
+def test_restore_batch_snapshot_skips_objects_by_zone_map(spark, tmp_path):
+    """A one-topic snapshot restore opens only that topic's objects: the
+    commit log's per-object offset zone maps skip the rest, as they do for
+    the DataSource (disjoint-topic layout: A in hours 0-3, B in hours 4-7)."""
+    from guardian_for_apache_kafka_spark.core.model import RECORD_SCHEMA
+
+    rows = [
+        ("A" if h < 4 else "B", 0, h * 10 + i, None, f"v{h}:{i}".encode(),
+         dt.datetime(2024, 3, 1, h, 5 * i), 0)
+        for h in range(8)
+        for i in range(3)
+    ]
+    recs = spark.createDataFrame(rows, RECORD_SCHEMA)
+    dest = str(tmp_path / "zoned")
+    committed_backup(recs, dest, ChronoUnitSlice("HOURS"))
+    keys = snapshot_keys(dest)
+    assert len(keys) == 8
+
+    got = restore_batch(spark, dest, snapshot=True, topics={"A"})
+    opened = sorted(os.path.basename(p) for p in got.inputFiles())
+    assert opened == sorted(physical_name(k) for k in keys[:4])
+    assert as_set(got) == as_set(recs.where(F.col("topic") == "A"))
+
+
+def test_guardian_datasource_rejects_version_and_timestamp_as_of(spark, records, tmp_path):
+    """versionAsOf and timestampAsOf together are ambiguous (Delta rejects
+    them too): the reader refuses the pair instead of letting one win."""
+    from guardian_for_apache_kafka_spark.sources.guardian_source import (
+        GuardianReader,
+        register_guardian_datasource,
+    )
+
+    both = {"versionasof": "0", "timestampasof": "2999-01-01T00:00:00Z"}
+    with pytest.raises(ValueError, match="versionAsOf.*timestampAsOf"):
+        GuardianReader({"path": "x", **both})
+
+    dest = str(tmp_path / "vt")
+    committed_backup(records, dest, ChronoUnitSlice("HOURS"))
+    register_guardian_datasource(spark)
+    reader = spark.read.format("guardian").option("versionAsOf", "0")
+    with pytest.raises(Exception, match="versionAsOf.*timestampAsOf"):
+        reader.option("timestampAsOf", both["timestampasof"]).load(dest).collect()

@@ -105,6 +105,9 @@ def test_key_to_datetime_extensionless_directory_names():
     assert frac.tzinfo is not None
     # extension-ful keys (with a path prefix) still strip down correctly
     assert key_to_datetime("a/b/2024-01-01T00:00:45.123Z.json.gz") == frac
+    # partition-directory keys carry a slice= prefix
+    assert key_to_datetime("slice=2024-01-01T00:00:00Z") == bare
+    assert key_to_datetime("slice=2024-01-01T00:00:45.123Z.json") == frac
 
 
 _ALL_UNITS = ["SECONDS", "MINUTES", "HOURS", "DAYS"]
