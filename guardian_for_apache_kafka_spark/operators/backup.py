@@ -240,6 +240,11 @@ def _decorate_key(key: str, decoration: str) -> str:
     return stem[: -len(".json")] + decoration + ".json" + ext
 
 
+#: Characters of framed records buffered before one write to the object's
+#: stream: bounds the framer's memory by a chunk, not by the slice.
+_CHUNK_CHARS = 1 << 20
+
+
 def frame_array_objects(
     rows,
     open_object,
@@ -253,37 +258,52 @@ def frame_array_objects(
     ``slice, topic, partition, offset, json``, sorted by the first four. Each
     key ``calculate_key(slice)`` (+ ``key_decoration``) becomes one object
     ``[json,json,...]`` (``,null]`` for ``interrupted_key``, terminateSource
-    :594-600) on the stream ``open_object(key)``, closed here. Gzip is one
+    :594-600) on the stream ``open_object(key)``, closed here. Records are
+    written as ``,``-joined chunks of at most about ``_CHUNK_CHARS``
+    characters; the bytes do not depend on the chunking. Gzip is one
     ``mtime=0`` member whose FNAME is set explicitly to the physical name
     without ``.gz``, so the bytes never depend on the stream's ``.name``
     (deterministic like the reference's GZIPOutputStream,
     BackupClient.scala:248-285). Returns per-(key, topic, partition) stats of
     the rows written: ``(key, topic, partition, n, n_offsets, lo, hi)``."""
-    cur_key = None
+    cur_slice = cur_key = None
     fh = raw = None
+    pending: list[str] = []
+    pending_chars = 0
+    head = b"["  # what precedes the next chunk: "[" opens the object
     stats: dict = {}
+
+    def flush() -> None:
+        nonlocal pending_chars, head
+        if pending:
+            fh.write(head + ",".join(pending).encode("utf-8"))
+            pending.clear()
+            pending_chars, head = 0, b","
 
     def finish() -> None:
         if fh is not None:
+            flush()
             fh.write(b",null]" if cur_key == interrupted_key else b"]")
             fh.close()
             if raw is not fh:
                 raw.close()  # GzipFile.close() leaves the byte stream open
 
     for row in rows:
-        key = _decorate_key(calculate_key(row["slice"], compression), key_decoration)
-        if key != cur_key:
-            finish()
-            cur_key = key
-            raw = open_object(key)
-            fh = raw if compression != "gzip" else _gzip.GzipFile(
-                filename=physical_name(key), fileobj=raw, mode="wb",
-                compresslevel=compression_level, mtime=0,
-            )
-            fh.write(b"[")
-        else:
-            fh.write(b",")
-        fh.write(row["json"].encode("utf-8"))
+        if row["slice"] != cur_slice:
+            cur_slice = row["slice"]
+            key = _decorate_key(calculate_key(cur_slice, compression), key_decoration)
+            if key != cur_key:
+                finish()
+                cur_key, head = key, b"["
+                raw = open_object(key)
+                fh = raw if compression != "gzip" else _gzip.GzipFile(
+                    filename=physical_name(key), fileobj=raw, mode="wb",
+                    compresslevel=compression_level, mtime=0,
+                )
+        pending.append(row["json"])
+        pending_chars += len(pending[-1])
+        if pending_chars >= _CHUNK_CHARS:
+            flush()
         st = stats.setdefault((cur_key, row["topic"], row["partition"]), [0, 0, None, None])
         st[0] += 1
         off = row["offset"]
@@ -314,16 +334,17 @@ def write_guardian_format(
 
     Distribution: rows are hash-distributed by slice and sorted within
     partitions, so each executor streams out its slices sequentially without
-    materializing a slice in memory... except for the gzip/array framing which
-    is per-file streaming anyway. ``dest`` may be a bare local path or any
-    ``scheme://`` URI ``pyarrow.fs`` can dial (file, s3/s3a, gs, hdfs) — see
-    :func:`_open_slice_output`. Objects are framed by
-    :func:`frame_array_objects`.
+    materializing a slice in memory: :func:`frame_array_objects` buffers at
+    most one bounded chunk of framed records per write. The write is one
+    Spark action; only ``interrupted=True`` adds a ``max(slice)`` aggregate
+    job before it, to name the object that gets the sentinel. ``dest`` may
+    be a bare local path or any ``scheme://`` URI ``pyarrow.fs`` can dial
+    (file, s3/s3a, gs, hdfs) — see :func:`_open_slice_output`.
     """
     _ensure_dest_dir(dest)
     sliced = with_slice(records, config, anchor_us)
-    last_slice_row = sliced.agg(F.max("slice").alias("m")).collect()[0]
-    last_slice = last_slice_row["m"]
+    # only the interrupted sentinel needs the last slice: one aggregate job
+    last_slice = sliced.agg(F.max("slice")).first()[0] if interrupted else None
     wire = sliced.select(
         F.col("slice"),
         F.col("topic"),

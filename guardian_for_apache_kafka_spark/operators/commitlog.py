@@ -506,7 +506,6 @@ def committed_merge_slices(
     if cur:
         groups.append(cur)
 
-    root = _local_root(dest)
     actions: list[dict] = []
     for comp in (None, "gzip"):
         plan = [g for g in groups if len(g) >= 2 and compression_of_key(g[0]) == comp]
@@ -515,9 +514,7 @@ def committed_merge_slices(
         merged = None
         for grp in plan:
             first = key_to_datetime(grp[0])
-            part = read_guardian_files(
-                spark, [os.path.join(root, physical_name(k)) for k in grp]
-            ).withColumn("slice", F.lit(first))
+            part = read_guardian_files(spark, dest, grp).withColumn("slice", F.lit(first))
             merged = part if merged is None else merged.unionByName(part)
         wire = merged.select(
             "slice", "topic", "partition", "offset",

@@ -21,11 +21,15 @@ def compact_latest_by_key(
     records: DataFrame, key_cols: tuple[str, ...] = ("topic", "partition", "key")
 ) -> DataFrame:
     """Latest record per key; later = greater (timestamp, offset). NULL-key
-    records pass through uncompacted."""
-    keyed = records.where(F.col("key").isNotNull())
-    unkeyed = records.where(F.col("key").isNull())
-    w = Window.partitionBy(*key_cols).orderBy(F.col("timestamp").desc(), F.col("offset").desc())
-    latest = (
-        keyed.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
+    records pass through uncompacted, duplicates included.
+
+    One scan: a NULL-key row gets a window partition of its own (a unique
+    ``monotonically_increasing_id`` in the partition spec), so it is always
+    its partition's row 1 and the filter stays a pure ``__rn == 1``. That
+    keeps Spark's map-side ``WindowGroupLimit`` (Partial) before the
+    exchange; a ``key IS NULL OR __rn == 1`` filter would drop it."""
+    null_key = F.when(F.col("key").isNull(), F.monotonically_increasing_id())
+    w = Window.partitionBy(*key_cols, null_key).orderBy(
+        F.col("timestamp").desc(), F.col("offset").desc()
     )
-    return latest.unionByName(unkeyed)
+    return records.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")

@@ -107,9 +107,9 @@ def describe_archive(spark: SparkSession, dest: str, instances: bool = False) ->
                 key_to_datetime(logical_name(name))  # ':' stored as '_' on disk
             except Exception:
                 continue
-            gfiles.append((logical_name(name), str(status.getPath()), status.getLen()))
+            gfiles.append((logical_name(name), status.getLen()))
         if gfiles:
-            return _describe_guardian_files(spark, gfiles)
+            return _describe_guardian_files(spark, dest, gfiles)
         hint = instance_roots(spark, dest)
         if hint:
             raise ValueError(
@@ -134,28 +134,18 @@ def describe_archive(spark: SparkSession, dest: str, instances: bool = False) ->
     ).orderBy("slice")
 
 
-def _describe_guardian_files(spark: SparkSession, gfiles) -> "DataFrame":
-    """Inventory branch for the reference's own layout (flat time-keyed JSON
-    array objects, possibly .gz): one row per object key, record counts from
-    ONE whole-file parse pass grouped by file — the describe verb works on
-    archives written by EITHER the engine-native JSON-lines writer or the
-    byte-exact guardian-format writer (caught by the round-5 CLI smoke:
-    this case previously returned silently empty)."""
+def _object_key_col() -> "Column":
+    """Logical key (``<ISO>.json[.gz]``) of the object a
+    ``read_guardian_files`` row was parsed from. ``input_file_name()`` yields
+    a URI: percent-encodable characters in the object name (space, '%', '#')
+    arrive escaped and would never match the FileSystem listing's
+    logical_name() key (ADVICE r5). So the basename is decoded — protecting
+    literal '+' (legal in a URI path, but URLDecoder would turn it into a
+    space; ISO offset keys contain it) by pre-escaping to %2B — with the raw
+    basename as fallback if the URI is unescaped; then physical '_' ->
+    logical ':' (backup.logical_name)."""
     from pyspark.sql import functions as F
 
-    from guardian_for_apache_kafka_spark.core.model import RECORD_JSON_SCHEMA_DDL
-
-    meta = spark.createDataFrame(
-        [(name, 1, size) for name, _, size in gfiles],
-        "slice string, n_files int, bytes long",
-    )
-    raw = spark.read.text([path for _, path, _ in gfiles], wholetext=True)
-    # input_file_name() yields a URI: percent-encodable characters in the
-    # object name (space, '%', '#') arrive escaped and would never match the
-    # FileSystem listing's logical_name() key (ADVICE r5). Decode the
-    # basename — protecting literal '+' (legal in a URI path, but URLDecoder
-    # would turn it into a space; ISO offset keys contain it) by pre-escaping
-    # to %2B — and fall back to the raw basename if the URI is unescaped.
     basename = F.element_at(F.split(F.input_file_name(), "/"), -1)
     decoded = F.coalesce(
         F.expr(
@@ -164,15 +154,34 @@ def _describe_guardian_files(spark: SparkSession, gfiles) -> "DataFrame":
         ),
         basename,
     )
+    return F.translate(decoded, "_", ":")
+
+
+def _object_slice_col() -> "Column":
+    """``_object_key_col`` without its ``.json[.gz]`` extension."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(_object_key_col(), r"\.json(\.gz)?$", "")
+
+
+def _describe_guardian_files(spark: SparkSession, dest: str, gfiles) -> "DataFrame":
+    """Inventory branch for the reference's own layout (flat time-keyed JSON
+    array objects, possibly .gz): one row per object key, record counts from
+    ONE whole-file parse pass grouped by file — the describe verb works on
+    archives written by EITHER the engine-native JSON-lines writer or the
+    byte-exact guardian-format writer (caught by the round-5 CLI smoke:
+    this case previously returned silently empty)."""
+    from pyspark.sql import functions as F
+
+    from guardian_for_apache_kafka_spark.operators.restore import read_guardian_files
+
+    meta = spark.createDataFrame(
+        [(name, 1, size) for name, size in gfiles],
+        "slice string, n_files int, bytes long",
+    )
     counts = (
-        raw.select(
-            F.translate(decoded, "_", ":").alias("slice"),
-            # physical '_' -> logical ':' (backup.logical_name)
-            F.explode(
-                F.from_json("value", f"array<struct<{RECORD_JSON_SCHEMA_DDL}>>")
-            ).alias("rec"),
-        )
-        .where(F.col("rec").isNotNull())
+        read_guardian_files(spark, dest, [name for name, _ in gfiles])
+        .select(_object_key_col().alias("slice"))
         .groupBy("slice")
         .agg(F.count("*").alias("n_records"))
     )
@@ -523,52 +532,24 @@ def archive_manifest(spark: SparkSession, dest: str) -> "DataFrame":
     whole-file parse pass emits (slice, n_records, checksum) with
     ``checksum = sum(record_checksum_col())`` — the fixity record an
     operator stores next to the archive and re-runs before trusting a
-    restore. ONE job: file listing via the destination's FileSystem (any
-    scheme), slice identity from the decoded object basename, counts and
-    digest sums map-side combined per slice."""
-    import os
-
+    restore. ONE pass over the objects: listed on the driver through the
+    destination's FileSystem (any scheme) and opened by
+    ``restore.read_guardian_files`` without a listing job; slice identity
+    from the decoded object basename; counts and digest sums map-side
+    combined per slice, so collecting it runs the scan stage and the
+    per-slice reduce (two Spark jobs under AQE)."""
     from pyspark.sql import functions as F
 
-    from guardian_for_apache_kafka_spark.core.model import (
-        RECORD_JSON_SCHEMA_DDL,
-        parsed_json_to_record_cols,
+    from guardian_for_apache_kafka_spark.operators.restore import (
+        list_backup_keys,
+        read_guardian_files,
     )
-    from guardian_for_apache_kafka_spark.operators.backup import physical_name
-    from guardian_for_apache_kafka_spark.operators.restore import list_backup_keys
 
-    keys = list_backup_keys(dest, spark)
-    if not keys:
-        # empty archive: an empty manifest, not a reader error — verify/diff
-        # then classify every expected slice as missing, which is the truth
-        return spark.createDataFrame(
-            [], "slice string, n_records long, checksum long"
-        )
-    paths = [os.path.join(dest, physical_name(k)) for k in keys]
-    raw = spark.read.text(paths, wholetext=True)
-    basename = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    decoded = F.coalesce(
-        F.expr(
-            "try_url_decode(replace(element_at(split(input_file_name(), '/'), -1),"
-            " '+', '%2B'))"
-        ),
-        basename,
-    )
-    slice_key = F.regexp_replace(
-        F.translate(decoded, "_", ":"), r"\.json(\.gz)?$", ""
-    )
-    rec = (
-        raw.select(
-            slice_key.alias("slice"),
-            F.explode(
-                F.from_json("value", f"array<struct<{RECORD_JSON_SCHEMA_DDL}>>")
-            ).alias("rec"),
-        )
-        .where(F.col("rec").isNotNull())
-        .select("slice", *parsed_json_to_record_cols(F.col("rec")))
-    )
+    # an empty archive gives an empty manifest, not a reader error —
+    # verify/diff then classify every expected slice as missing, the truth
     return (
-        rec.withColumn("__ck", record_checksum_col())
+        read_guardian_files(spark, dest, list_backup_keys(dest, spark))
+        .select(_object_slice_col().alias("slice"), record_checksum_col().alias("__ck"))
         .groupBy("slice")
         .agg(F.count("*").alias("n_records"), F.sum("__ck").alias("checksum"))
     )
@@ -688,47 +669,17 @@ def archive_topic_zonemap(spark: SparkSession, dest: str) -> "DataFrame":
     pass emits (slice, topics, n_records) — the pruning statistics a
     topic-filtered scan consults to skip whole objects (the Spark-native
     analogue of parquet row-group zone maps, at object granularity)."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from guardian_for_apache_kafka_spark.core.model import (
-        RECORD_JSON_SCHEMA_DDL,
-        parsed_json_to_record_cols,
+    from guardian_for_apache_kafka_spark.operators.restore import (
+        list_backup_keys,
+        read_guardian_files,
     )
-    from guardian_for_apache_kafka_spark.operators.backup import physical_name
-    from guardian_for_apache_kafka_spark.operators.restore import list_backup_keys
 
-    keys = list_backup_keys(dest, spark)
-    if not keys:
-        return spark.createDataFrame(
-            [], "slice string, topics array<string>, n_records long"
-        )
-    paths = [os.path.join(dest, physical_name(k)) for k in keys]
-    raw = spark.read.text(paths, wholetext=True)
-    basename = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    decoded = F.coalesce(
-        F.expr(
-            "try_url_decode(replace(element_at(split(input_file_name(), '/'), -1),"
-            " '+', '%2B'))"
-        ),
-        basename,
-    )
-    slice_key = F.regexp_replace(
-        F.translate(decoded, "_", ":"), r"\.json(\.gz)?$", ""
-    )
-    rec = (
-        raw.select(
-            slice_key.alias("slice"),
-            F.explode(
-                F.from_json(F.col("value"), f"array<struct<{RECORD_JSON_SCHEMA_DDL}>>")
-            ).alias("rec"),
-        )
-        .where(F.col("rec").isNotNull())
-        .select("slice", *parsed_json_to_record_cols(F.col("rec")))
-    )
     return (
-        rec.groupBy("slice")
+        read_guardian_files(spark, dest, list_backup_keys(dest, spark))
+        .select(_object_slice_col().alias("slice"), "topic")
+        .groupBy("slice")
         .agg(
             F.array_sort(F.collect_set("topic")).alias("topics"),
             F.count("*").cast("long").alias("n_records"),

@@ -197,20 +197,55 @@ def _straddle_bound(
     return min((key_to_datetime(keys[0]) for keys in plans if keys), default=None)
 
 
-def read_guardian_files(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """R4+R5: parse reference-format backup objects (JSON arrays, possibly
-    ``null``-terminated, possibly .gz) into the internal record schema.
+#: Hadoop glob metacharacters an object name can carry; ``pathGlobFilter``
+#: would read them as pattern syntax (GlobPattern), so they are escaped.
+_GLOB_SPECIAL = frozenset("\\{}[]*?,")
 
-    ``spark.read.text`` handles the gzip codec transparently; each whole-file
-    array is parsed JVM-side with ``from_json`` + ``explode`` and the null
-    sentinel dropped (R6's ``rec IS NOT NULL``) — no Python per-record work.
+
+def _open_objects(spark: SparkSession, root: str, keys: list[str] | None) -> DataFrame:
+    """One row per archive object under ``root``: its whole (gunzipped)
+    text in ``value``. ``root`` is listed once, on the driver, and a
+    ``pathGlobFilter`` alternation of the escaped physical names keeps
+    exactly ``keys`` (``None``: every object). Handing Spark one path per
+    object instead would list them with a distributed job past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths and
+    read each path as a glob, so ``[``, ``{`` or ``*`` in a name break it."""
+    reader = spark.read
+    if keys is not None:
+        names = (
+            "".join("\\" + c if c in _GLOB_SPECIAL else c for c in physical_name(k))
+            for k in keys
+        )
+        reader = reader.option("pathGlobFilter", "{" + ",".join(names) + "}")
+    return reader.text(root, wholetext=True)
+
+
+def read_guardian_files(
+    spark: SparkSession, root: str, keys: list[str] | None = None
+) -> DataFrame:
+    """R4+R5: parse the reference-format backup objects ``keys`` (logical
+    names; ``None``: every object) under ``root`` — JSON arrays, possibly
+    ``null``-terminated, possibly .gz — into the internal record schema.
+
+    The one object opener: every whole-object read of guardian objects in
+    ``operators/`` goes through here (``scan_corrupt_files`` shares its
+    ``_open_objects`` to see the unparsed text). Building the read launches
+    no Spark job at any object count, ``inputFiles()`` is exactly the
+    requested objects, and other files under ``root`` are never opened.
+    ``spark.read.text`` handles the gzip codec transparently; each
+    whole-file array is parsed JVM-side with ``from_json`` + ``explode``
+    and the null sentinel dropped (R6's ``rec IS NOT NULL``) — no Python
+    per-record work. Per-object columns such as ``input_file_name()`` may
+    be selected on the result.
     """
-    raw = spark.read.text(paths, wholetext=True)
+    if keys is not None and not keys:
+        return spark.createDataFrame([], RECORD_SCHEMA)
     rec = F.explode(
         F.from_json(F.col("value"), f"array<struct<{RECORD_JSON_SCHEMA_DDL}>>")
     ).alias("rec")
     return (
-        raw.select(rec)
+        _open_objects(spark, root, keys)
+        .select(rec)
         .where(F.col("rec").isNotNull())
         .select(*parsed_json_to_record_cols(F.col("rec")))
     )
@@ -279,8 +314,7 @@ def scan_corrupt_files(spark: SparkSession, source: str) -> DataFrame:
     keys = list_backup_keys(source, spark)
     if not keys:
         return spark.createDataFrame([], "path string, bytes long, parsed_records long")
-    paths = [os.path.join(source, physical_name(k)) for k in keys]
-    raw = spark.read.text(paths, wholetext=True).select(
+    raw = _open_objects(spark, source, keys).select(
         F.input_file_name().alias("path"),
         F.length("value").cast("long").alias("bytes"),
         F.coalesce(
@@ -365,9 +399,7 @@ def restore_batch(
         keys = plan_restore_keys(
             source, from_when, snapshot=snapshot, version=version, topics=topics, spark=spark
         )
-        if not keys:
-            return spark.createDataFrame([], RECORD_SCHEMA)
-        records = read_guardian_files(spark, [os.path.join(source, physical_name(k)) for k in keys])
+        records = read_guardian_files(spark, source, keys)
     elif fmt in ("json", "parquet", "orc"):
         # the -1-slice straddle is handled record-exact by the timestamp
         # filter below; partition pruning needs only a lower bound

@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 from guardian_for_apache_kafka_spark import get_spark
@@ -14,6 +16,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), number of Spark jobs fn launched)``,
+    counted by the status tracker under a job group of fn's own. The
+    listener bus is drained first: the tracker learns of jobs from it."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group, interruptOnCancel=False)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def pytest_configure(config):

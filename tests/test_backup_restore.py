@@ -152,7 +152,7 @@ def test_producer_mapping_rename_and_null_key(spark, records):
     assert out2.where(F.col("key").isNull()).count() == records.count()
 
 
-def test_compaction_latest_by_key(spark, records):
+def test_compaction_latest_by_key(spark, records, tmp_path):
     compacted = compact_latest_by_key(records)
     # one record per (topic, partition, key)
     keyed = compacted.where(F.col("key").isNotNull())
@@ -166,6 +166,29 @@ def test_compaction_latest_by_key(spark, records):
     joined = keyed.join(expected, ["topic", "partition", "key"])
     assert joined.where(F.col("timestamp") != F.col("max_ts")).count() == 0
     assert keyed.count() == expected.count()
+
+    # NULL-key records pass through exactly, two identical ones included
+    base = records.where(F.col("key").isNotNull()).orderBy("offset").limit(3)
+    unkeyed = base.withColumn("key", F.lit(None).cast("binary"))
+    with_nulls = records.unionByName(unkeyed).unionByName(unkeyed.limit(1))
+    out = compact_latest_by_key(with_nulls).where(F.col("key").isNull())
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, with_nulls.where(F.col("key").isNull()).collect())
+    )
+    assert out.count() == records.where(F.col("key").isNull()).count() + 4
+
+    # shape: one scan of the archive, and the map-side row limit before the
+    # exchange (a pure `__rn == 1` filter keeps it)
+    dest = str(tmp_path / "arch")
+    write_guardian_format(with_nulls, dest, ChronoUnitSlice("HOURS"))
+    compacted = compact_latest_by_key(restore_batch(spark, dest))
+    plan = compacted._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert any(
+        "WindowGroupLimit" in line and line.rstrip().endswith("Partial")
+        for line in plan.splitlines()
+    )
+    assert as_set(compacted) == as_set(compact_latest_by_key(with_nulls))
 
 
 from hypothesis import given, settings, strategies as st  # noqa: E402
@@ -553,6 +576,126 @@ def test_scan_corrupt_files_flags_unparseable_objects(spark, tmp_path):
     assert bad[0].parsed_records == 0 and bad[0].bytes > 8
     # and restore indeed silently drops that file's records (the divergence)
     assert restore_batch(spark, dest, fmt="guardian").count() < records.count()
+
+def test_restore_and_corrupt_scan_read_glob_character_names(spark, tmp_path):
+    """Object names holding glob syntax (``,``, ``{}``, ``[]``, ``*``) are
+    valid slice keys; a restore and the corrupt scan open every listed
+    object, each exactly, instead of reading its name as a pattern."""
+    from urllib.parse import unquote
+
+    from guardian_for_apache_kafka_spark.operators.restore import scan_corrupt_files
+
+    dest = tmp_path / "arch"
+    dest.mkdir()
+    names = [
+        "2024-03-01T05_00Z.[d].json",
+        "2024-03-01T06_00Z.{a,b}.json",
+        "2024-03-01T07_00Z.*.json",
+        "2024-03-01T08_00Z.a,b.json",
+        "2024-03-01T09_00Z.json",
+    ]
+    # decoy objects a pattern reading of the names above would also match
+    decoys = ["2024-03-01T05_00Z.d.json", "2024-03-01T06_00Z.a.json", "2024-03-01T07_00Z.x.json"]
+    for i, name in enumerate(names + decoys):
+        ms = 1709269200000 + (i % len(names)) * 3600_000
+        (dest / name).write_text(
+            f'[{{"topic":"t{i}","partition":0,"offset":{i},"key":null,'
+            f'"value":"YQ==","timestamp":{ms},"timestamp_type":0}}]'
+        )
+    keys = list_backup_keys(str(dest))
+    assert len(keys) == len(names) + len(decoys)
+    restored = restore_batch(spark, str(dest))
+    assert sorted(r.offset for r in restored.collect()) == list(range(len(keys)))
+    assert len(restored.inputFiles()) == len(keys)
+
+    for name in names:  # truncate mid-record: every one must be flagged
+        (dest / name).write_text((dest / name).read_text()[:40])
+    bad = scan_corrupt_files(spark, str(dest)).collect()
+    # paths come back as URIs: '[', '{' and friends percent-escaped
+    assert sorted(unquote(r.path.rsplit("/", 1)[-1]) for r in bad) == sorted(names)
+
+
+def test_frame_array_objects_chunked_bytes(monkeypatch):
+    """An object written in several chunks has the bytes of one write of its
+    whole framed payload: plain, and one ``mtime=0`` gzip member named after
+    the physical object without ``.gz``, with and without the sentinel."""
+    import datetime as _dt
+    import io
+
+    from guardian_for_apache_kafka_spark.core.timeslice import calculate_key
+    from guardian_for_apache_kafka_spark.operators import backup
+
+    monkeypatch.setattr(backup, "_CHUNK_CHARS", 64)
+    t0 = _dt.datetime(2024, 3, 1, 5, tzinfo=UTC)
+    rows = [
+        {"slice": t0 + _dt.timedelta(hours=h), "topic": "t", "partition": 0, "offset": i,
+         "json": f'{{"offset":{i},"pad":"{"x" * (i % 7)}"}}'}
+        for h in range(2) for i in range(h * 40, h * 40 + 40)
+    ]
+
+    class Capture(io.BytesIO):
+        def __init__(self):
+            super().__init__()
+            self.writes = 0
+
+        def write(self, b):
+            self.writes += 1
+            return super().write(b)
+
+        def close(self):
+            self.value = self.getvalue()
+            super().close()
+
+    for compression in (None, "gzip"):
+        for level in (1, 9):
+            for interrupted in (False, True):
+                opened = {}
+
+                def open_object(key):
+                    opened[key] = Capture()
+                    return opened[key]
+
+                last = calculate_key(rows[-1]["slice"], compression)
+                stats = backup.frame_array_objects(
+                    rows, open_object, compression, level,
+                    interrupted_key=last if interrupted else None,
+                )
+                assert sorted(n for _, _, _, n, *_ in stats) == [40, 40]
+                for h, (key, out) in enumerate(sorted(opened.items())):
+                    tail = b",null]" if interrupted and key == last else b"]"
+                    payload = b"[" + b",".join(
+                        r["json"].encode() for r in rows[h * 40:(h + 1) * 40]
+                    ) + tail
+                    if compression is None:
+                        assert out.writes > 3  # several chunks, then the tail
+                        assert out.value == payload
+                        continue
+                    want = io.BytesIO()
+                    with gzip.GzipFile(
+                        filename=physical_name(key)[: -len(".gz")], fileobj=want,
+                        mode="wb", compresslevel=level, mtime=0,
+                    ) as gz:
+                        gz.write(payload)
+                    assert out.value == want.getvalue()
+
+
+def test_write_guardian_format_runs_the_last_slice_job_only_when_interrupted(
+    records, tmp_path, count_jobs
+):
+    """Only the interrupted sentinel needs ``max(slice)``: a plain write is
+    the write's own two jobs (shuffle by slice, then the framing tasks)."""
+    _, plain = count_jobs(
+        lambda: write_guardian_format(records, str(tmp_path / "a"), ChronoUnitSlice("HOURS"))
+    )
+    _, interrupted = count_jobs(
+        lambda: write_guardian_format(
+            records, str(tmp_path / "b"), ChronoUnitSlice("HOURS"), interrupted=True
+        )
+    )
+    assert plain == 2
+    assert interrupted == 4
+    assert sorted(os.listdir(tmp_path / "a")) == sorted(os.listdir(tmp_path / "b"))
+
 
 def test_jsonl_corrupt_line_dropped_and_audit_catches_loss(spark, tmp_path):
     """A corrupt JSON-line must not surface as an all-null record row; the

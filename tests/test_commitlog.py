@@ -799,6 +799,36 @@ def test_restore_batch_snapshot_skips_objects_by_zone_map(spark, tmp_path):
     assert as_set(got) == as_set(recs.where(F.col("topic") == "A"))
 
 
+def test_snapshot_restore_build_lists_once_and_opens_only_planned_objects(
+    spark, records, tmp_path, count_jobs
+):
+    """Building a snapshot restore over more objects than Spark's parallel
+    listing threshold (32 paths) launches no Spark job; reading it is one
+    job; it opens exactly the snapshot's objects — never a committed-looking
+    orphan, nor an orphan that is not even gzip."""
+    import gzip
+
+    dest = str(tmp_path / "many")
+    committed_backup(records, dest, ChronoUnitSlice("HOURS"), compression="gzip")
+    keys = snapshot_keys(dest)
+    assert len(keys) > 32
+    with open(os.path.join(dest, "2099-01-01T00_00Z.json.gz"), "wb") as f:
+        f.write(gzip.compress(b'[{"topic":"orphan","partition":0,"offset":1,"key":null,'
+                              b'"value":"YQ==","timestamp":0,"timestamp_type":0}]'))
+    with open(os.path.join(dest, "2099-01-02T00_00Z.json.gz"), "wb") as f:
+        f.write(b"not gzip")
+    assert len(list_backup_keys(dest)) == len(keys) + 2
+
+    got, built = count_jobs(lambda: restore_batch(spark, dest, snapshot=True))
+    assert built == 0
+    _, noop = count_jobs(lambda: got.write.format("noop").mode("overwrite").save())
+    assert noop == 1
+    assert sorted(os.path.basename(p) for p in got.inputFiles()) == sorted(
+        physical_name(k) for k in keys
+    )
+    assert as_set(got) == as_set(records)
+
+
 def test_guardian_datasource_rejects_version_and_timestamp_as_of(spark, records, tmp_path):
     """versionAsOf and timestampAsOf together are ambiguous (Delta rejects
     them too): the reader refuses the pair instead of letting one win."""
