@@ -157,6 +157,14 @@ HEADLINE = {
 
 N_RUNS = 3
 
+
+def median_of_runs(run, build) -> float:
+    """Median seconds of ``N_RUNS`` calls of ``run(build)``, rounded to
+    0.1 ms. ``N_RUNS`` is odd, so the median is one measured run; the median
+    of two runs would be their mean."""
+    return round(statistics.median(run(build) for _ in range(N_RUNS)), 4)
+
+
 # the driver's stdout tail capture is 2000 chars; leave headroom for the
 # trailing newline and any stray final log line
 _TAIL_BUDGET = 1900
@@ -317,7 +325,7 @@ def main() -> None:
     def timed(build) -> float:
         build().collect()  # warm-up (file listing, codegen, JIT)
         free_local_checkpoints(spark)
-        return round(statistics.median(one_run(build) for _ in range(N_RUNS)), 4)
+        return median_of_runs(one_run, build)
 
     timings: dict[str, float] = {}
     stock: dict[str, float] = {}
@@ -353,9 +361,7 @@ def main() -> None:
             # noop-sink column (r12, VERDICT r11 ask #8): runs AFTER the
             # collect()-timed protocol above, so the driver-comparable
             # numbers are produced by the byte-identical r11 methodology
-            noop[metric] = round(
-                statistics.median(one_run_noop(build_engine) for _ in range(2)), 4
-            )
+            noop[metric] = median_of_runs(one_run_noop, build_engine)
         except Exception as exc:  # noop column is additive; never fail the metric
             print(f"bench: {metric} noop failed: {exc}", file=sys.stderr)
 
@@ -444,9 +450,7 @@ def main() -> None:
                 try:
                     build_engine().collect()  # warm
                     free_local_checkpoints(spark)
-                    sf1_q[metric] = round(
-                        statistics.median(one_run(build_engine) for _ in range(2)), 4
-                    )
+                    sf1_q[metric] = median_of_runs(one_run, build_engine)
                 except Exception as exc:
                     print(f"bench sf1: {metric} failed: {exc}", file=sys.stderr)
                     sf1_q[metric] = -1.0

@@ -9,6 +9,8 @@ with the executors. The Pandas-UDF path is reserved for genuinely non-SQL work
 
 from __future__ import annotations
 
+import weakref
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -141,7 +143,12 @@ def minhash_signature_udf(num_hashes: int = 64, n: int = 3, seed: int = 0x6A09E6
             start = end
         return pd.Series(out)
 
-    return _sig
+    # asNondeterministic: callers drop the NULL signatures with
+    # ``where(__sig IS NOT NULL)``, which the optimizer would otherwise push
+    # below the spread exchange, running the whole kernel once serially in
+    # the scan task and again in parallel after it. The kernel is
+    # deterministic in fact; the marker only forbids copying/reordering.
+    return _sig.asNondeterministic()
 
 
 def simhash64(tokens: Column, words: int = 4, bits_per_word: int = 16) -> Column:
@@ -234,7 +241,9 @@ def simhash_words_udf(words: int = 4, bits_per_word: int = 16):
             start = end
         return pd.Series(out)
 
-    return _fp
+    # asNondeterministic: keeps the caller's ``__fp IS NOT NULL`` filter
+    # above the spread exchange (see minhash_signature_udf)
+    return _fp.asNondeterministic()
 
 
 def hamming_distance64(a: Column, b: Column) -> Column:
@@ -371,6 +380,10 @@ def hyperplane_buckets_expr(vec_col: str, planes: int = 16, tables: int = 1) -> 
     return F.transform(F.sequence(F.lit(0), F.lit(tables - 1)), bucket)
 
 
+# Keyed by the live session object (weakly), like sources.tables._TABLE_CACHE.
+_SIGNS_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
 def hyperplane_signs(spark, dim: int, planes: int = 16, tables: int = 1, sign_hash: str = "xxhash64"):
     """The (tables, planes, dim) ±1 hyperplane sign tensor, computed with the
     SAME JVM parity expression the reference column uses — one tiny Spark job
@@ -381,9 +394,20 @@ def hyperplane_signs(spark, dim: int, planes: int = 16, tables: int = 1, sign_ha
     ``sign_hash="md5"``: parity of :func:`portable_hash64` over the string
     ``"d:p:t"`` — reproducible in DuckDB
     (``CAST('0x'||substr(md5(concat(d,':',p,':',t)),1,16) AS UBIGINT) & 1``),
-    which lets the d6 oracle recompute the exact same hyperplanes."""
+    which lets the d6 oracle recompute the exact same hyperplanes.
+
+    Memoized per (session, dim, planes, tables, sign_hash), the way
+    ``sources.tables.load_table`` memoizes its frames: the tensor is a pure
+    function of those values, so only a session's first call pays the Spark
+    job and the dim*planes*tables driver loop. The returned array is
+    read-only because every caller shares it."""
     import numpy as np
 
+    per_session = _SIGNS_CACHE.setdefault(spark, {})
+    key = (dim, planes, tables, sign_hash)
+    signs = per_session.get(key)
+    if signs is not None:
+        return signs
     if sign_hash == "xxhash64":
         parity = F.xxhash64("d", "p", "t") % 2 == 0
     elif sign_hash == "md5":
@@ -406,6 +430,8 @@ def hyperplane_signs(spark, dim: int, planes: int = 16, tables: int = 1, sign_ha
     signs = np.empty((tables, planes, dim), dtype=np.float64)
     for r in rows:
         signs[r["t"], r["p"], r["d"]] = r["s"]
+    signs.setflags(write=False)
+    per_session[key] = signs
     return signs
 
 

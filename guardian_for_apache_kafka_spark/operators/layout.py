@@ -21,6 +21,17 @@ def spread_narrow_scan(df: DataFrame) -> DataFrame:
     forced a plan-to-RDD conversion per operator call). The extra exchange
     moves the raw rows once — far cheaper than serializing the expensive
     expression work.
+
+    A filter on a kernel column placed after the spread is pushed BELOW it:
+    the optimizer inlines the projected kernel into the filter and moves it
+    through the round-robin repartition, so ``spread_narrow_scan(df)
+    .select(kernel.alias("c")).where(<test on c>)`` runs the kernel once in
+    the serial scan task and again after the exchange. Prevent it with one
+    of: mark a Pandas-UDF kernel ``asNondeterministic()``; apply the test
+    to the ``localCheckpoint``-ed frame instead (Catalyst higher-order
+    kernels cannot be marked); or drop the test where downstream drops the
+    rows anyway (an empty array explodes to nothing).
+    ``tests/test_kernel_once.py`` checks every registry query for it.
     """
     if df.isStreaming:
         # no static file listing to probe; micro-batch sizing is the

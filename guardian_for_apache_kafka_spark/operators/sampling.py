@@ -179,6 +179,79 @@ def temperature_mixture(
     )
 
 
+def token_budget_quotas(docs: DataFrame, budget: int) -> DataFrame:
+    """Integer per-source token quotas that sum exactly to ``budget``
+    (largest-remainder / Hamilton apportionment) from temperature T = 2
+    weights: w = isqrt(tokens * 1e6), the libm ``floor(sqrt)`` seed
+    corrected to the true integer square root by two integer comparisons.
+    From the weights on everything is exact integer arithmetic: base quota
+    = budget * w div W, the leftover goes one unit each to the largest
+    remainders (ties by source name). Returns (source, tokens, quota,
+    share_ppm) with share_ppm = quota * 1e6 div budget, all BIGINT.
+
+    Plan: one corpus-sized source aggregate (map-side combined), then
+    source-count-sized windows. Domain bound: tokens * 1e6 lives in int64,
+    so per-source token counts are valid up to 2^63 / 1e6 ~ 9.2e12."""
+    from pyspark.sql import Window
+
+    if budget <= 0:
+        raise ValueError(f"budget must be positive, got {budget}")
+    src = docs.groupBy("source").agg(
+        F.sum(F.size(F.split(F.col("text"), " ")).cast("long")).alias("tokens")
+    )
+    b = F.lit(budget).cast("long")
+    t6 = F.col("tokens") * F.lit(1000000).cast("long")
+    w0 = F.floor(F.sqrt(t6.cast("double"))).cast("long")
+    # integer-isqrt correction: the libm sqrt seed can be off by one ulp's
+    # floor on some builds; two integer comparisons pin w to the true
+    # floor(sqrt(t6)) under ANY libm (t6 ~ 1e13 << 2^52, so w0 is within
+    # +-1 of the true root and one step suffices).
+    wts = src.select(
+        "source",
+        "tokens",
+        t6.alias("t6"),
+        w0.alias("w0"),
+    ).select(
+        "source",
+        "tokens",
+        F.when(
+            (F.col("w0") + 1) * (F.col("w0") + 1) <= F.col("t6"),
+            F.col("w0") + 1,
+        )
+        .when(F.col("w0") * F.col("w0") > F.col("t6"), F.col("w0") - 1)
+        .otherwise(F.col("w0"))
+        .alias("w"),
+    )
+    w_all = Window.partitionBy()
+    quo = wts.select(
+        "source",
+        "tokens",
+        (b * F.col("w")).cast("long").alias("bw"),
+        F.sum("w").over(w_all).alias("tw"),
+    ).select(
+        "source",
+        "tokens",
+        F.expr("bw div tw").alias("base_quota"),
+        (F.col("bw") % F.col("tw")).alias("remainder"),
+    )
+    quo = quo.select(
+        "source",
+        "tokens",
+        "base_quota",
+        "remainder",
+        (b - F.sum("base_quota").over(w_all)).alias("leftover"),
+    )
+    ranked = quo.withColumn(
+        "rr", F.row_number().over(Window.orderBy(F.desc("remainder"), "source"))
+    )
+    quota = (
+        F.col("base_quota") + F.when(F.col("rr") <= F.col("leftover"), 1).otherwise(0)
+    ).cast("long")
+    return ranked.select("source", "tokens", quota.alias("quota")).withColumn(
+        "share_ppm", F.expr(f"quota * 1000000 div {budget}")
+    )
+
+
 def leakage_free_split_label(
     df: DataFrame,
     weights: dict[str, float],

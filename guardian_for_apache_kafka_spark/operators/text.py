@@ -944,13 +944,13 @@ def shingle_duplication_profile(
     # t17 discipline: single-partition generation measured 3.9 s vs 2.4 s
     # spread at sf0.1), and HOIST the token array into its own projection
     # so ngram_shingles' transform lambda can't re-evaluate split() per
-    # element (the t15 lesson)
+    # element (the t15 lesson). No size(__shingles) > 0 filter: an empty
+    # array explodes to nothing, and the filter would be pushed below the
+    # spread and build every document's shingles twice.
     tok = spread_narrow_scan(df).select(
         F.col(id_col).alias("__id"), tokens_col(content_col).alias("__tk")
     )
-    sh = tok.select(
-        "__id", ngram_shingles(F.col("__tk"), n).alias("__shingles")
-    ).where(F.size("__shingles") > 0)
+    sh = tok.select("__id", ngram_shingles(F.col("__tk"), n).alias("__shingles"))
     inv = sh.select(
         "__id",
         F.explode(F.transform("__shingles", lambda c: F.xxhash64(c))).alias("__s"),
@@ -1376,11 +1376,11 @@ def shingle_novelty_profile(
     tok = spread_narrow_scan(df).select(
         F.col(id_col).alias("__id"), tokens_col(content_col).alias("__tk")
     )
-    sh = tok.select(
-        "__id", ngram_shingles(F.col("__tk"), n).alias("__shingles")
-    ).where(F.size("__shingles") > 0)
+    sh = tok.select("__id", ngram_shingles(F.col("__tk"), n).alias("__shingles"))
     # ngram_shingles dedups within the doc, so this IS the (doc, shingle)
-    # rollup — one row per distinct pair
+    # rollup — one row per distinct pair; a document with no shingles
+    # explodes to nothing (no size filter: it would be pushed below the
+    # spread and build the shingles twice)
     pairs = sh.select(
         "__id",
         F.explode(F.transform("__shingles", lambda c: F.xxhash64(c))).alias("__s"),

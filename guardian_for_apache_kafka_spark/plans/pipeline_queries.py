@@ -6163,7 +6163,7 @@ def d33(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tot AS (SELECT sum(w) AS tw, CAST(1000000 AS BIGINT) AS budget FROM wts),
     quo AS (
-      SELECT source, tokens, w,
+      SELECT source, tokens, w, budget,
              (budget * w) // tw AS base_quota,
              (budget * w) % tw AS remainder,
              budget - sum((budget * w) // tw) OVER () AS leftover
@@ -6176,8 +6176,8 @@ def d33(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT source, CAST(tokens AS BIGINT) AS tokens,
            CAST(base_quota + CASE WHEN rr <= leftover THEN 1 ELSE 0 END
                 AS BIGINT) AS quota,
-           CAST(base_quota + CASE WHEN rr <= leftover THEN 1 ELSE 0 END
-                AS BIGINT) AS share_ppm
+           CAST((base_quota + CASE WHEN rr <= leftover THEN 1 ELSE 0 END)
+                * 1000000 // budget AS BIGINT) AS share_ppm
     FROM ranked ORDER BY source
     """,
     tags=("pipeline", "mixture", "apportionment"),
@@ -6197,8 +6197,10 @@ def p15(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engine versions can shift a weight by one ulp's floor. From the
     weights on, quota = budget * w div W and the remainder ranking are
     EXACT integer arithmetic; the share column is reported as
-    ``share_ppm`` (BIGINT, parts-per-million of the budget — scale factor
-    1e6, which with budget = 1e6 makes it numerically equal to ``quota``).
+    ``share_ppm`` = quota * 1e6 div budget (BIGINT, parts-per-million of
+    the budget), computed from the budget on both sides rather than
+    re-aliasing ``quota`` (equal only while the budget is 1e6). The
+    builder is ``operators/sampling.token_budget_quotas``.
     Round-12 hardening (VERDICT r11 ask #1a): ``share`` was previously the
     one float-typed output column (``quota / 1e6`` DOUBLE) and the query
     was driver-hash-red in r10 AND r11 with rows+schema green both times;
@@ -6239,64 +6241,10 @@ def p15(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps math.isqrt — three genuinely different isqrt routes agreeing.
     Verified bit-identical at sf0.001/0.01/0.1 + selfdiff +
     third-opinion in the same commit."""
+    from guardian_for_apache_kafka_spark.operators.sampling import token_budget_quotas
+
     docs = load_table(spark, sf_dir, "documents")
-    src = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " ")).cast("long")).alias("tokens")
-    )
-    budget = F.lit(1000000).cast("long")
-    t6 = F.col("tokens") * F.lit(1000000).cast("long")
-    w0 = F.floor(F.sqrt(t6.cast("double"))).cast("long")
-    # integer-isqrt correction: the libm sqrt seed can be off by one ulp's
-    # floor on some builds; two integer comparisons pin w to the true
-    # floor(sqrt(t6)) under ANY libm (t6 ~ 1e13 << 2^52, so w0 is within
-    # +-1 of the true root and one step suffices).
-    wts = src.select(
-        "source",
-        "tokens",
-        t6.alias("t6"),
-        w0.alias("w0"),
-    ).select(
-        "source",
-        "tokens",
-        F.when(
-            (F.col("w0") + 1) * (F.col("w0") + 1) <= F.col("t6"),
-            F.col("w0") + 1,
-        )
-        .when(F.col("w0") * F.col("w0") > F.col("t6"), F.col("w0") - 1)
-        .otherwise(F.col("w0"))
-        .alias("w"),
-    )
-    w_all = Window.partitionBy()
-    quo = wts.select(
-        "source",
-        "tokens",
-        (budget * F.col("w")).cast("long").alias("bw"),
-        F.sum("w").over(w_all).alias("tw"),
-    ).select(
-        "source",
-        "tokens",
-        F.expr("bw div tw").alias("base_quota"),
-        (F.col("bw") % F.col("tw")).alias("remainder"),
-    )
-    quo = quo.select(
-        "source",
-        "tokens",
-        "base_quota",
-        "remainder",
-        (budget - F.sum("base_quota").over(w_all)).alias("leftover"),
-    )
-    ranked = quo.withColumn(
-        "rr", F.row_number().over(Window.orderBy(F.desc("remainder"), "source"))
-    )
-    quota = F.col("base_quota") + F.when(
-        F.col("rr") <= F.col("leftover"), 1
-    ).otherwise(0)
-    return ranked.select(
-        "source",
-        "tokens",
-        quota.cast("long").alias("quota"),
-        quota.cast("long").alias("share_ppm"),
-    ).orderBy("source")
+    return token_budget_quotas(docs, budget=1_000_000).orderBy("source")
 
 
 @query(

@@ -1580,7 +1580,7 @@ def chk_p15(sf):
     order = sorted(w, key=lambda s: (-rem[s], s))
     quota = {s: base_q[s] + (1 if i < leftover else 0) for i, s in enumerate(order)}
     rows = sorted(
-        (s, int(src[s]), quota[s], quota[s]) for s in w
+        (s, int(src[s]), quota[s], quota[s] * 1000000 // budget) for s in w
     )
     return pd.DataFrame(rows, columns=["source", "tokens", "quota", "share_ppm"])
 

@@ -159,6 +159,33 @@ def test_p15_isqrt_correction_on_perfect_square_census(spark):
     assert sum(q for _, q, _ in got.values()) == budget
 
 
+def test_p15_share_ppm_follows_a_budget_other_than_one_million(spark):
+    """share_ppm is quota * 1e6 div budget. At the registry's budget of 1e6
+    it equals quota, so only another budget can tell the two apart."""
+    from guardian_for_apache_kafka_spark.operators.sampling import token_budget_quotas
+
+    rows = [
+        (i, " ".join(["w"] * n_tok), "en", src, 0)
+        for i, (src, n_tok) in enumerate(
+            [("a", 7)] * 7 + [("b", 8)] * 8 + [("c", 10)] * 5
+        )
+    ]
+    docs = spark.read.parquet(os.path.join(_docs_dir(spark, rows), "documents.parquet"))
+    budget = 777
+    got = {r.source: r for r in token_budget_quotas(docs, budget=budget).collect()}
+    w = {"a": math.isqrt(49 * 10**6), "b": math.isqrt(64 * 10**6), "c": math.isqrt(50 * 10**6)}
+    tw = sum(w.values())
+    base = {s: budget * w[s] // tw for s in w}
+    order = sorted(w, key=lambda s: (-(budget * w[s] % tw), s))
+    leftover = budget - sum(base.values())
+    quota = {s: base[s] + (1 if i < leftover else 0) for i, s in enumerate(order)}
+    assert {s: r.quota for s, r in got.items()} == quota
+    assert sum(quota.values()) == budget
+    assert {s: r.share_ppm for s, r in got.items()} == {
+        s: q * 1_000_000 // budget for s, q in quota.items()
+    }
+
+
 def test_exact_flags_null_on_empty_docs(spark):
     """r10 advisor: n_words == 0 must yield NULL ratio flags (matching the
     float battery's divide-by-zero NULLs), never a vacuous 0<=0 pass."""

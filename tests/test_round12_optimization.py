@@ -114,3 +114,20 @@ def test_free_local_checkpoints_counts_and_clears(spark):
     freed = free_local_checkpoints(spark)
     assert freed >= 1
     assert free_local_checkpoints(spark) == 0
+
+
+def test_bench_median_is_one_measured_run():
+    """bench.py's columns are the median of an odd number of runs. With two
+    runs statistics.median returns their mean, which no run measured."""
+    import bench
+
+    times = iter([3.0, 1.0, 2.5, 100.0])
+    builds = []
+
+    def run(build):
+        builds.append(build)
+        return next(times)
+
+    assert bench.median_of_runs(run, "plan") == 2.5
+    assert builds == ["plan"] * 3
+    assert bench.N_RUNS % 2 == 1
