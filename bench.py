@@ -29,23 +29,33 @@ decimals if needed), and the FULL result — per-metric stock timings and
 ratios included — is written to ``BENCH_RESULT.json`` next to this file.
 Spark's console progress bar is disabled so no carriage-return frames can
 land between the JSON line and EOF.
+
+This is the repo's one query-measurement module. Outside ``main`` it offers
+``timed(build)`` (one query's warm median), ``paired(run, engine, stock)``
+(an engine-vs-stock alternation) and ``build_scale(spark, k, base)`` (the
+replica-scaled corpus the ``sf1`` section reads).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from guardian_for_apache_kafka_spark.plans import all_queries  # noqa: E402
 from guardian_for_apache_kafka_spark.session import (  # noqa: E402
     free_local_checkpoints,
     get_spark,
 )
+from guardian_for_apache_kafka_spark.sources.tables import register_views  # noqa: E402
+from scripts.measure_baseline import QUERIES as STOCK_QUERIES  # noqa: E402
 
 # metric name (BASELINE.md §2) -> registry query name
 HEADLINE = {
@@ -157,12 +167,173 @@ HEADLINE = {
 
 N_RUNS = 3
 
+# sf1 section: heavy engine-only entries, cheap-first so the wall budget
+# sheds only the expensive tail
+SF1_HEAVY = {
+    "hapax_ratio": "t31_hapax_ratio",
+    "cosine_topk": "s1_cosine_topk",
+    "minhash_lsh": "d4_minhash_lsh_dedup",
+    "d3_jaccard_pairs": "d3_ngram_jaccard_pairs",
+    "knn_graph": "s11_knn_graph",
+    "curation_funnel": "p13_curation_funnel",
+    # r12 additions (VERDICT r11 ask #2): the queries whose r11 scale-posture
+    # trades (kept broadcasts, Arrow kernels, hashed grams, single-pass
+    # digests, NDV split) were argued from the 100 TB posture but unmeasured
+    # at 10x
+    "approx_aggregates": "q24_approx_aggregates",
+    "cdc_chunk_dedup": "d29_cdc_chunk_dedup",
+    "ngram_diversity": "t41_ngram_diversity",
+    "bloom_decontaminate": "d15_bloom_decontaminate",
+    "pq_rerank": "s15_pq_rerank",
+    "ivfpq_rerank": "s16_ivfpq_rerank",
+    "embedding_near_dup": "d6_embedding_near_dup",
+    "ivfpq_nprobe_curve": "s18_ivfpq_nprobe_curve",
+}
+# sf1 headline metrics with stock twins over the same x10 views; ngram_novelty
+# is the naive shingle-keyed SQL vs the engine's de-skewed owner-attribution
+# aggregate (the r8 de-skew, measured where it matters)
+SF1_TWINNED = ("quality_filter", "readability", "canonical_dedup", "ngram_novelty")
+
+
+def one_run(build) -> float:
+    """Seconds of one ``collect()`` of a fresh ``build()``. The frame is
+    BUILT outside the timer (plan construction is a fixed driver cost — py4j
+    chatter for the engine, SQL parse for stock); a fresh plan instance per
+    run means no AQE query-stage reuse, so collect() re-executes the plan.
+    Exception: under AQE, calling a lazy ``localCheckpoint(eager=False)``
+    already executes every shuffle and broadcast stage upstream of it, so a
+    frame that holds such a barrier does that work while being built, outside
+    the timer (d6's pair joins, the scan stage of d3's and d4's spread
+    exchange). After the timer stops, the run's dead localCheckpoint blocks
+    are freed (VERDICT r11 ask #6): accumulated blocks were measured to drag
+    later queries via GC pressure."""
+    df = build()
+    t0 = time.perf_counter()
+    df.collect()
+    dt = time.perf_counter() - t0
+    free_local_checkpoints(df.sparkSession)
+    return dt
+
+
+def one_run_noop(build) -> float:
+    """``one_run`` through the noop sink (guide §1.4): computes every column
+    of every row, discards the write — isolates computation from result
+    transfer. Reported as a SEPARATE column next to collect()."""
+    df = build()
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    dt = time.perf_counter() - t0
+    free_local_checkpoints(df.sparkSession)
+    return dt
+
+
+def _median(runs) -> float:
+    """Median seconds rounded to 0.1 ms. Over ``N_RUNS`` (odd) runs it is
+    one measured run; the median of two runs would be their mean."""
+    return round(statistics.median(runs), 4)
+
 
 def median_of_runs(run, build) -> float:
-    """Median seconds of ``N_RUNS`` calls of ``run(build)``, rounded to
-    0.1 ms. ``N_RUNS`` is odd, so the median is one measured run; the median
-    of two runs would be their mean."""
-    return round(statistics.median(run(build) for _ in range(N_RUNS)), 4)
+    """Median of ``N_RUNS`` calls of ``run(build)``."""
+    return _median([run(build) for _ in range(N_RUNS)])
+
+
+def timed(build) -> float:
+    """One query's column: a warm-up run (file listing, codegen, JIT), then
+    the median of ``N_RUNS`` ``one_run`` calls."""
+    one_run(build)
+    return median_of_runs(one_run, build)
+
+
+def paired(run, engine, stock) -> tuple[float, float]:
+    """Engine and stock medians under run-level alternation: one warm-up run
+    of each side, then engine run i and stock run i execute back-to-back
+    ``N_RUNS`` times, so machine-load drift and JVM warm-up slope hit both
+    sides equally — the ratio is the load-robust number."""
+    run(engine)
+    run(stock)
+    e_runs, s_runs = [], []
+    for _ in range(N_RUNS):
+        e_runs.append(run(engine))
+        s_runs.append(run(stock))
+    return _median(e_runs), _median(s_runs)
+
+
+#: x{k} corpora persist here across processes; ``v2`` marks the permutation
+#: embedding transform, so no older cache is served
+WORK = "/tmp/sparkgraft_scale_r10_v2"
+
+
+def build_scale(spark, k: int, base: str) -> str:
+    """Write ``base``'s corpus scaled k-times by replicas under ``WORK`` and
+    return its directory. A finished copy carries ``_OK`` and is returned
+    without a Spark job; the key includes ``base``'s name, so an x10 of
+    sf0.01 is never served for sf0.1. Replica scaling, not synthesis: the
+    input tables stay the only source of content. Replica i > 0 gets:
+
+    - documents: ``doc_id + i * 10**7`` and every token suffixed ``~i``.
+      Token counts are kept but shingle and token SETS are disjoint across
+      replicas, so each replica keeps the original's near-dup structure and
+      work scales ~linearly (plain copies would plant k-cliques of exact
+      dups). The suffix moves the mean token length from ~5 to ~7: still in
+      p13's 3..10 gopher band, but p13's selectivity is not exactly kept.
+    - embeddings: ``vec_id + i * 10**7`` and the dimensions cyclically
+      shifted by ``7 * i``. A permutation is orthogonal, so within-replica
+      cosine and L2 relations hold exactly while cross-replica similarity
+      falls to the corpus background (an offset on one dimension instead
+      makes replicas near-parallel in cosine space: 2206 -> 2,007,206 d6
+      pairs at x2).
+
+    The other tables are symlinks to ``base``'s."""
+    out = os.path.join(WORK, f"x{k}-{os.path.basename(base.rstrip('/'))}")
+    if os.path.exists(os.path.join(out, "_OK")):
+        return out
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    docs = spark.read.parquet(f"{base}/documents.parquet")
+    embs = spark.read.parquet(f"{base}/embeddings.parquet")
+    dim = len(embs.select("embedding").head()[0])  # one lookup for all replicas
+    d_all, e_all = docs, embs
+    for i in range(1, k):
+        suffix = F.lit(f"~{i}")
+        d_all = d_all.unionByName(
+            docs.select(
+                (F.col("doc_id") + i * 10_000_000).alias("doc_id"),
+                F.array_join(
+                    F.transform(F.split("text", " "), lambda t: F.concat(t, suffix)),
+                    " ",
+                ).alias("text"),
+                "lang",
+                "source",
+                "n_chars",
+            )
+        )
+        rot = (7 * i) % dim
+        e_all = e_all.unionByName(
+            embs.select(
+                (F.col("vec_id") + i * 10_000_000).alias("vec_id"),
+                F.concat(
+                    F.slice("embedding", rot + 1, dim - rot),
+                    F.slice("embedding", 1, rot),
+                ).alias("embedding"),
+                "label",
+            )
+        )
+    d_all.repartition(max(4, 4 * k)).write.mode("overwrite").parquet(
+        os.path.join(out, "documents.parquet")
+    )
+    e_all.repartition(max(4, k)).write.mode("overwrite").parquet(
+        os.path.join(out, "embeddings.parquet")
+    )
+    # the registry loader wants the other tables too
+    for t in "region nation customer supplier part orders lineitem events".split():
+        src = f"{base}/{t}.parquet"
+        dst = os.path.join(out, f"{t}.parquet")
+        if os.path.exists(src) and not os.path.exists(dst):
+            os.symlink(src, dst)
+    with open(os.path.join(out, "_OK"), "w") as f:
+        f.write("ok")
+    return out
 
 
 # the driver's stdout tail capture is 2000 chars; leave headroom for the
@@ -284,48 +455,8 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-
     # stock formulations, run in-process against temp views over the same data
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
-    from measure_baseline import QUERIES as STOCK_QUERIES  # noqa: E402
-
-    from guardian_for_apache_kafka_spark.sources.tables import register_views  # noqa: E402
-
     register_views(spark, sf_dir)
-
-    def one_run(build) -> float:
-        """One full execution: the DataFrame is BUILT outside the timer (plan
-        construction is a fixed driver cost — py4j chatter for the engine, SQL
-        parse for stock — not per-query execution work); a fresh plan instance
-        per run means no AQE query-stage reuse, so collect() re-executes the
-        whole plan. After the timer stops, the run's dead localCheckpoint
-        blocks are freed (r12, VERDICT r11 ask #6): each fresh plan leaves
-        its own blocks behind, and accumulated blocks were measured to drag
-        later queries via GC pressure — the timed region is untouched, the
-        session no longer carries state from one run into the next."""
-        df = build()
-        t0 = time.perf_counter()
-        df.collect()
-        dt = time.perf_counter() - t0
-        free_local_checkpoints(spark)
-        return dt
-
-    def one_run_noop(build) -> float:
-        """Same protocol through the noop sink (guide §1.4): computes every
-        column of every row, discards the write — isolates computation from
-        result transfer. Reported as a SEPARATE column next to collect();
-        the driver's comparable number remains the collect() median."""
-        df = build()
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        free_local_checkpoints(spark)
-        return dt
-
-    def timed(build) -> float:
-        build().collect()  # warm-up (file listing, codegen, JIT)
-        free_local_checkpoints(spark)
-        return median_of_runs(one_run, build)
 
     timings: dict[str, float] = {}
     stock: dict[str, float] = {}
@@ -340,19 +471,9 @@ def main() -> None:
             if sql is None:
                 timings[metric] = timed(build_engine)
             else:
-                # run-level alternation: engine run i and stock run i execute
-                # back-to-back, so machine-load drift and JVM warm-up slope hit
-                # both sides equally — the ratio is the load-robust number
-                build_stock = lambda: spark.sql(sql)  # noqa: E731
-                build_engine().collect()
-                free_local_checkpoints(spark)
-                build_stock().collect()
-                e_runs, s_runs = [], []
-                for _ in range(N_RUNS):
-                    e_runs.append(one_run(build_engine))
-                    s_runs.append(one_run(build_stock))
-                timings[metric] = round(statistics.median(e_runs), 4)
-                stock[metric] = round(statistics.median(s_runs), 4)
+                timings[metric], stock[metric] = paired(
+                    one_run, build_engine, lambda: spark.sql(sql)
+                )
         except Exception as exc:  # keep the bench line parseable even on failure
             print(f"bench: {metric} ({qname}) failed: {exc}", file=sys.stderr)
             timings[metric] = -1.0
@@ -366,91 +487,42 @@ def main() -> None:
             print(f"bench: {metric} noop failed: {exc}", file=sys.stderr)
 
     # ---- sf1 section (round 11, VERDICT r10 #4): the heavy dedup/
-    # similarity/text/pipeline families at 10x the corpus, where plan shape
-    # (not session overhead) dominates — BASELINE.md concedes sf0.1 is
-    # overhead-dominated. Corpus = the multi-scale sweep's replica scaling
-    # (scripts/scaling_stress_r10.build_scale: disjoint shingle sets,
-    # permuted embeddings — structure-preserving, no artificial cliques).
-    # Stock twins re-run over the SAME x10 views for the documents-table
-    # metrics plain SQL expresses; the heavy engine-only entries carry
-    # absolute seconds. Skip with SPARK_GRAFT_SF1=0.
+    # similarity/text/pipeline families at 10x the corpus (build_scale),
+    # where plan shape (not session overhead) dominates — BASELINE.md
+    # concedes sf0.1 is overhead-dominated. Stock twins re-run over the SAME
+    # x10 views for the documents-table metrics plain SQL expresses; the
+    # heavy engine-only entries carry absolute seconds. A wall budget keeps
+    # sf1 from ever costing the driver the headline line. Skip with
+    # SPARK_GRAFT_SF1=0.
     sf1_result = None
     if os.environ.get("SPARK_GRAFT_SF1", "1").lower() not in ("0", "false"):
         try:
-            from scaling_stress_r10 import build_scale
-
             x10 = build_scale(spark, 10, base=sf_dir)
             register_views(spark, x10)  # stock twins now read the x10 corpus
-            # cheap-first so a tight budget sheds the expensive tail, and a
-            # wall budget so sf1 can NEVER cost the driver the headline line
-            sf1_heavy = {
-                "hapax_ratio": "t31_hapax_ratio",
-                "cosine_topk": "s1_cosine_topk",
-                "minhash_lsh": "d4_minhash_lsh_dedup",
-                "d3_jaccard_pairs": "d3_ngram_jaccard_pairs",
-                "knn_graph": "s11_knn_graph",
-                "curation_funnel": "p13_curation_funnel",
-                # r12 additions (VERDICT r11 ask #2): the queries whose r11
-                # scale-posture trades (kept broadcasts, Arrow kernels,
-                # hashed grams, single-pass digests, NDV split) were argued
-                # from the 100 TB posture but unmeasured at 10x — cheapest
-                # first so the wall budget sheds only the expensive tail
-                "approx_aggregates": "q24_approx_aggregates",
-                "cdc_chunk_dedup": "d29_cdc_chunk_dedup",
-                "ngram_diversity": "t41_ngram_diversity",
-                "bloom_decontaminate": "d15_bloom_decontaminate",
-                "pq_rerank": "s15_pq_rerank",
-                "ivfpq_rerank": "s16_ivfpq_rerank",
-                "embedding_near_dup": "d6_embedding_near_dup",
-                "ivfpq_nprobe_curve": "s18_ivfpq_nprobe_curve",
-            }
-            sf1_twinned = (
-                "quality_filter", "readability", "canonical_dedup",
-                # the naive shingle-keyed SQL vs the engine's de-skewed
-                # owner-attribution aggregate — the r8 de-skew, measured
-                # where it matters (10x corpus)
-                "ngram_novelty",
-            )
             sf1_budget = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET", "300"))
             sf1_t0 = time.perf_counter()
             sf1_skipped: list[str] = []
             sf1_q: dict[str, float] = {}
             sf1_s: dict[str, float] = {}
             # the TWINNED set runs FIRST (r12): it is cheap, and its
-            # engine/stock ratios are the comparable sf1 signal — with the 8
-            # new heavy engine-only entries ahead of it, a tight budget shed
-            # ngram_novelty and ratio_total silently changed composition
-            for metric in sf1_twinned:
+            # engine/stock ratios are the comparable sf1 signal — behind the
+            # heavy entries a tight budget shed ngram_novelty and ratio_total
+            # silently changed composition
+            for metric in (*SF1_TWINNED, *SF1_HEAVY):
                 if time.perf_counter() - sf1_t0 > sf1_budget:
                     sf1_skipped.append(metric)
                     continue
-                builder = queries[HEADLINE[metric]]
-                sql = STOCK_QUERIES[metric]
-                build_engine = lambda: builder(spark, x10)  # noqa: E731
-                build_stock = lambda: spark.sql(sql)  # noqa: E731
-                try:
-                    build_engine().collect()
-                    free_local_checkpoints(spark)
-                    build_stock().collect()
-                    e_runs, s_runs = [], []
-                    for _ in range(2):  # run-level alternation, as headline
-                        e_runs.append(one_run(build_engine))
-                        s_runs.append(one_run(build_stock))
-                    sf1_q[metric] = round(statistics.median(e_runs), 4)
-                    sf1_s[metric] = round(statistics.median(s_runs), 4)
-                except Exception as exc:
-                    print(f"bench sf1: {metric} failed: {exc}", file=sys.stderr)
-                    sf1_q[metric] = -1.0
-            for metric, qname in sf1_heavy.items():
-                if time.perf_counter() - sf1_t0 > sf1_budget:
-                    sf1_skipped.append(metric)
-                    continue
-                builder = queries[qname]
+                twinned = metric in SF1_TWINNED
+                builder = queries[HEADLINE[metric] if twinned else SF1_HEAVY[metric]]
                 build_engine = lambda: builder(spark, x10)  # noqa: E731
                 try:
-                    build_engine().collect()  # warm
-                    free_local_checkpoints(spark)
-                    sf1_q[metric] = median_of_runs(one_run, build_engine)
+                    if twinned:
+                        sql = STOCK_QUERIES[metric]
+                        sf1_q[metric], sf1_s[metric] = paired(
+                            one_run, build_engine, lambda: spark.sql(sql)
+                        )
+                    else:
+                        sf1_q[metric] = timed(build_engine)
                 except Exception as exc:
                     print(f"bench sf1: {metric} failed: {exc}", file=sys.stderr)
                     sf1_q[metric] = -1.0
@@ -465,7 +537,7 @@ def main() -> None:
                 "scale": "10x",
                 "base": sf_dir,
                 "total": round(sum(v for v in sf1_q.values() if v > 0), 4),
-                "runs": 2,
+                "runs": N_RUNS,
                 "queries": sf1_q,
                 "stock_queries": sf1_s,
                 "ratio_vs_stock": sf1_ratios,
@@ -496,7 +568,7 @@ def main() -> None:
             "runs": N_RUNS,
             "stock_queries": stock,
             "queries_noop": noop,
-            "noop_runs": 2,
+            "noop_runs": N_RUNS,
             "ratio_vs_stock": ratios,
             "ratio_total": (
                 round(comparable_engine / comparable_stock, 3) if comparable_stock else None

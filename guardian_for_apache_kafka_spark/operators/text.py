@@ -927,7 +927,7 @@ def shingle_duplication_profile(
     materialization. All shuffled/checkpointed rows are (int64, int64,
     int64); document text never shuffles. At sf0.1 this formulation costs
     ~8% over the window one (2.2 s vs 2.1 s); the planted hot-shingle
-    stress (scripts/stress_round8.py, SCALE.md r8) is the scale
+    stress (SCALE.md r8) is the scale
     justification — with one stopword shingle at 89% of the stream the
     window forms a single reducer task carrying the whole corpus, while
     every reducer key here receives at most n_map_partitions combined

@@ -116,6 +116,44 @@ def test_free_local_checkpoints_counts_and_clears(spark):
     assert free_local_checkpoints(spark) == 0
 
 
+def test_free_local_checkpoints_keeps_cached_frames_and_persisted_rdds(spark):
+    sc = spark.sparkContext
+    free_local_checkpoints(spark)  # start from no dead checkpoint blocks
+
+    def persistent_ids():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    def cached_partitions(rdd_ids):
+        return sum(
+            info.numCachedPartitions()
+            for info in sc._jsc.sc().getRDDStorageInfo()
+            if info.id() in rdd_ids
+        )
+
+    before = persistent_ids()
+    cached = spark.range(1000).selectExpr("id * 2 AS v").cache()
+    cached.count()
+    cached_ids = persistent_ids() - before
+    persisted = sc.parallelize(range(1000), 4).persist()
+    persisted.count()
+    checkpoint = spark.range(1000).localCheckpoint(eager=False)
+    checkpoint.collect()
+    checkpoint_ids = persistent_ids() - before - cached_ids - {persisted.id()}
+    try:
+        assert cached_ids and checkpoint_ids
+        kept = cached_ids | {persisted.id()}
+        blocks = cached_partitions(kept)
+        assert blocks > 0
+
+        assert free_local_checkpoints(spark) == len(checkpoint_ids) == 1
+        assert not persistent_ids() & checkpoint_ids
+        assert kept <= persistent_ids()
+        assert cached_partitions(kept) == blocks
+    finally:
+        cached.unpersist(True)
+        persisted.unpersist(True)
+
+
 def test_bench_median_is_one_measured_run():
     """bench.py's columns are the median of an odd number of runs. With two
     runs statistics.median returns their mean, which no run measured."""
