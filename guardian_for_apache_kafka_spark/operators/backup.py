@@ -94,6 +94,16 @@ def _slice_dir_col(slice_: Column, config: TimeConfiguration) -> Column:
     return F.date_format(slice_, slice_dir_pattern(config))
 
 
+def _json_lines(records: DataFrame, config: TimeConfiguration, anchor_us: int | None = None) -> DataFrame:
+    """The JSON-lines frame ``(slice dir value, wire JSON)`` that
+    ``backup_batch`` and the streaming JSON-lines sinks write."""
+    sliced = with_slice(records, config, anchor_us)
+    return sliced.select(
+        _slice_dir_col(F.col("slice"), config).alias("slice"),
+        record_to_json_col().alias("value"),
+    )
+
+
 def _apply_hadoop_gzip_level(records: DataFrame, level: int | None) -> None:
     """Best-effort mapping of a reference-style gzip level (1-9,
     configs/Compression.scala:5) onto the Hadoop codec knob. Hadoop's zlib
@@ -125,12 +135,8 @@ def backup_batch(
     writes commit atomically via the output committer."""
     if compression:
         _apply_hadoop_gzip_level(records, compression_level)
-    sliced = with_slice(records, config, anchor_us)
     if fmt == "json":
-        out = sliced.select(
-            _slice_dir_col(F.col("slice"), config).alias("slice"),
-            record_to_json_col().alias("value"),
-        )
+        out = _json_lines(records, config, anchor_us)
         writer = out.write.partitionBy("slice").mode("append").format("text")
         if compression:
             writer = writer.option("compression", compression)
@@ -140,6 +146,7 @@ def backup_batch(
         # one compression flavor is gzip (the reference's, CompressionType
         # .scala:7-9); ORC has no gzip codec, so the request maps to zlib —
         # the same DEFLATE stream in ORC's framing.
+        sliced = with_slice(records, config, anchor_us)
         out = sliced.withColumn("slice", _slice_dir_col(F.col("slice"), config))
         writer = out.write.partitionBy("slice").mode("append").format(fmt)
         if compression:

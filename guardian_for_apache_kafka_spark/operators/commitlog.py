@@ -373,16 +373,16 @@ def stream_committed_backup(
     digest: bool = True,
 ):
     """Streaming archival with lakehouse commits: every micro-batch writes
-    guardian-format objects decorated ``.b<batch_id>`` (deterministic, so a
-    replayed batch rewrites ITS OWN orphans, never a committed object) and
-    publishes one ``stream_backup`` commit carrying the batch id. Replay
-    safety is commit-log-exact — if the log already holds this batch's
-    commit, the batch is a no-op — which upgrades foreachBatch's
-    "idempotent because rewrites collide" story
-    (`streaming/pipeline.stream_backup_foreach_batch`) to exactly-once
-    WITHOUT relying on overwrite semantics: snapshot readers never see a
-    batch twice or half. A slice receives one object per batch that touched
-    it; `committed_merge_slices` is the matching small-object compactor.
+    guardian-format objects decorated ``.q<query id>.b<batch_id>`` and
+    publishes one ``stream_backup`` commit carrying both ids. The query id
+    is stable across restarts of one checkpoint and distinct between
+    checkpoints, so a replayed batch rewrites ITS OWN orphans, never a
+    committed object, even in a slice another query also wrote. Replay
+    safety is commit-log-exact: a batch whose ``(query_id, batch_id)`` the
+    log already holds is a no-op (a legacy commit without ``query_id``
+    matches on ``batch_id`` alone), so snapshot readers never see a batch
+    twice or half. A slice receives one object per batch that touched it;
+    `committed_merge_slices` is the matching small-object compactor.
 
     ChronoUnitSlice only (an anchored PeriodFromFirst would need the
     checkpointed-anchor machinery; compose stream_backup_foreach_batch +
@@ -394,6 +394,9 @@ def stream_committed_backup(
         with_slice,
         write_array_objects,
     )
+    from guardian_for_apache_kafka_spark.streaming.pipeline import (
+        _start_foreach_batch,
+    )
 
     if not isinstance(config, ChronoUnitSlice):
         raise ValueError(
@@ -401,10 +404,12 @@ def stream_committed_backup(
         )
 
     def write_batch(batch_df, batch_id: int) -> None:
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
         for v in list_versions(dest):
             c = read_commit(dest, v)
             if c.get("operation") == "stream_backup" and c.get("batch_id") == batch_id:
-                return  # replayed batch: already committed, exactly-once
+                if c.get("query_id", query_id) == query_id:  # legacy: no query_id
+                    return  # replayed batch: already committed, exactly-once
         sliced = with_slice(batch_df, config)
         wire = sliced.select(
             "slice", "topic", "partition", "offset",
@@ -415,7 +420,8 @@ def stream_committed_backup(
         # exactly the written rows
         keys, stats = write_array_objects(
             wire, dest, compression=compression,
-            key_decoration=f".b{batch_id}", return_stats=True,
+            key_decoration=f".q{uuid.UUID(query_id).hex}.b{batch_id}",
+            return_stats=True,
         )
         if not keys:
             return  # empty batch: no objects, no commit
@@ -423,15 +429,10 @@ def stream_committed_backup(
             dest,
             _stats_actions(dest, keys, stats, digest),
             "stream_backup",
-            extra={"batch_id": batch_id},
+            extra={"query_id": query_id, "batch_id": batch_id},
         )
 
-    writer = records.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(records, write_batch, checkpoint, available_now)
 
 
 def committed_retention(

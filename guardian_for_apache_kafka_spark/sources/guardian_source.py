@@ -677,6 +677,10 @@ class GuardianStreamWriter(DataSourceStreamWriter):
     goes through the same ``_fs_ops`` dispatch as the batch writer
     (scheme aliases included).
 
+    One query per destination: ``batch-<id>-*`` names carry no query
+    identity, so a second query writing overlapping slices of the same
+    destination deletes the first one's files of equal batch id.
+
     Cites the reference's commit-after-upload resume contract
     (core-backup/.../BackupClientInterface.scala:375-398): Spark's
     checkpoint plays the offset log, this commit plays the terminating
@@ -716,11 +720,7 @@ class GuardianStreamWriter(DataSourceStreamWriter):
 
         write_bytes, read_bytes, move, delete, rmdir = _fs_ops(self.path)
         _ensure_dest_dir(self.path)
-        parts: list = []
-        for m in messages:
-            if m is None:
-                continue
-            parts.extend(m.parts)
+        parts = [p for m in messages if m is not None for p in m.parts]
         suffix = ".jsonl.gz" if self.compression == "gzip" else ".jsonl"
         prefix = f"batch-{batchId:010d}-"
         # a failed attempt of THIS batch may have committed some files with
@@ -739,11 +739,19 @@ class GuardianStreamWriter(DataSourceStreamWriter):
             sdir = f"slice={_quote(slice_val)}"
             _ensure_dest_dir(f"{self.path.rstrip('/')}/{sdir}")
             move(rel, f"{sdir}/{prefix}{i:05d}{suffix}")
-        rmdir(self.staging)
+        for staging in _staging_dirs(messages):
+            rmdir(staging)
 
     def abort(self, messages, batchId: int) -> None:
         *_, rmdir = _fs_ops(self.path)
-        rmdir(self.staging)
+        for staging in _staging_dirs(messages):
+            rmdir(staging)
+
+
+def _staging_dirs(messages) -> set[str]:
+    """The staging dirs named by the tasks' staged paths (each task staged
+    through its own unpickled writer, so ``self.staging`` is not theirs)."""
+    return {rel.split("/", 1)[0] for m in messages if m is not None for _, rel in m.parts}
 
 
 def _quote(value: str) -> str:

@@ -37,14 +37,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from guardian_for_apache_kafka_spark.core.model import RECORD_SCHEMA, record_to_json_col
+from guardian_for_apache_kafka_spark.core.model import RECORD_SCHEMA
 from guardian_for_apache_kafka_spark.core.timeslice import (
     ChronoUnitSlice,
     PeriodFromFirst,
     TimeConfiguration,
     slice_col,
-    slice_dir_pattern,
 )
+from guardian_for_apache_kafka_spark.operators.backup import _json_lines, backup_batch
 
 
 def records_file_stream(
@@ -77,6 +77,21 @@ def _load_or_store_anchor(checkpoint: str, batch_df: DataFrame) -> int | None:
     with open(p, "w") as fh:
         json.dump({"anchor_us": int(row["a"])}, fh)
     return int(row["a"])
+
+
+def _start_foreach_batch(
+    stream: DataFrame, write_batch, checkpoint: str, available_now: bool
+) -> StreamingQuery:
+    """The one foreachBatch runner: offsets commit to ``checkpoint`` only
+    after ``write_batch(batch_df, batch_id)`` returns, so a killed query
+    replays its last batch under the same id (each sink documents how it
+    absorbs that). ``available_now`` drains what is available and stops."""
+    writer = stream.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _instance_scoped(dest: str, checkpoint: str, instance_id: str | None) -> tuple[str, str]:
@@ -123,14 +138,8 @@ def stream_backup(
     config = config or ChronoUnitSlice("HOURS")
     if isinstance(config, PeriodFromFirst):
         raise ValueError("use stream_backup_foreach_batch for PeriodFromFirst (anchored) mode")
-    out = records.select(
-        F.date_format(slice_col(F.col("timestamp"), config), slice_dir_pattern(config)).alias(
-            "slice"
-        ),
-        record_to_json_col().alias("value"),
-    )
     writer = (
-        out.writeStream.format("text")
+        _json_lines(records, config).writeStream.format("text")
         .partitionBy("slice")
         .option("path", dest)
         .option("checkpointLocation", checkpoint)
@@ -152,13 +161,15 @@ def stream_backup_foreach_batch(
     instance_id: str | None = None,
 ) -> StreamingQuery:
     """foreachBatch archival supporting PeriodFromFirst: batch 0 captures and
-    persists the anchor; every batch then appends partitioned JSON-lines with
-    the same deterministic slice expression. Batch writes under foreachBatch
-    are idempotent per slice-directory because replayed batches rewrite the
-    same records (offsets are part of the wire format; restore dedups exact
-    replays via dropDuplicates on (topic, partition, offset) if the sink ever
-    double-commits). ``instance_id`` scopes the sink/checkpoint roots for the
-    shared-archive multi-writer layout exactly as in ``stream_backup``."""
+    persists the anchor; every batch is then one ``backup_batch`` append
+    (partitioned JSON-lines, the same deterministic slice expression).
+    ``instance_id`` scopes the sink/checkpoint roots for the shared-archive
+    multi-writer layout exactly as in ``stream_backup``.
+
+    At-least-once under replay: a batch replayed after a crash before its
+    checkpoint commit appends its records again, and ``restore_batch``
+    returns both copies. ``stream_backup`` and
+    ``operators/commitlog.stream_committed_backup`` are exactly-once."""
     dest, checkpoint = _instance_scoped(dest, checkpoint, instance_id)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -167,20 +178,9 @@ def stream_backup_foreach_batch(
             anchor = _load_or_store_anchor(checkpoint, batch_df)
             if anchor is None:
                 return
-        out = batch_df.select(
-            F.date_format(
-                slice_col(F.col("timestamp"), config, anchor), slice_dir_pattern(config)
-            ).alias("slice"),
-            record_to_json_col().alias("value"),
-        )
-        out.write.partitionBy("slice").mode("append").format("text").save(dest)
+        backup_batch(batch_df, dest, config, anchor_us=anchor)
 
-    writer = records.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(records, write_batch, checkpoint, available_now)
 
 
 def stream_slice_counts(
@@ -371,12 +371,7 @@ def stream_cohort_activity(
             .parquet(dest)
         )
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def stream_concurrency_points(
@@ -416,12 +411,7 @@ def stream_concurrency_points(
         )
         starts.unionAll(ends).write.mode("append").parquet(dest)
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def peak_concurrency_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -542,12 +532,7 @@ def stream_cdc_apply(
             os.path.join(snapshot_dir, f"v={batch_id + 1}")
         )
 
-    writer = updates.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(updates, apply_batch, checkpoint, available_now)
 
 
 def stream_ivm_apply(
@@ -587,12 +572,7 @@ def stream_ivm_apply(
             os.path.join(view_dir, f"v={batch_id + 1}")
         )
 
-    writer = updates.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(updates, apply_batch, checkpoint, available_now)
 
 
 def stream_audit_join(
@@ -661,7 +641,6 @@ def stream_heavy_hitters(
     the accumulated state is batches x batch-vocabulary, and compacting it
     is one exact groupBy — the Misra-Gries candidate bound stays the
     BATCH-side optimization (q56) where the full corpus is rescannable."""
-    import os as _os
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -672,15 +651,10 @@ def stream_heavy_hitters(
             .groupBy("token")
             .agg(F.count("*").alias("cnt"))
             .write.mode("overwrite")
-            .parquet(_os.path.join(dest, f"batch={batch_id}"))
+            .parquet(os.path.join(dest, f"batch={batch_id}"))
         )
 
-    writer = docs.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(docs, write_batch, checkpoint, available_now)
 
 
 def heavy_hitters_rollup(
@@ -812,12 +786,7 @@ def stream_incremental_dedup(
             )
         survivors.write.mode("append").parquet(keepers_dir)
 
-    writer = docs.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(docs, write_batch, checkpoint, available_now)
 
 
 def stream_interval_join(
@@ -883,7 +852,6 @@ def stream_manifest(
     and the rollup dedups on (batch_id, slice) before summing — so
     at-least-once delivery cannot double-count a slice. State is zero; the
     accumulator is slices x batches rows, metadata-sized."""
-    from guardian_for_apache_kafka_spark.core.timeslice import ChronoUnitSlice
     from guardian_for_apache_kafka_spark.operators.maintenance import (
         record_checksum_col,
     )
@@ -905,12 +873,7 @@ def stream_manifest(
             .parquet(dest)
         )
 
-    writer = records.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(records, write_batch, checkpoint, available_now)
 
 
 def manifest_rollup(spark: SparkSession, manifest_dir: str) -> DataFrame:
@@ -962,12 +925,7 @@ def stream_ab_activity(
             .parquet(dest)
         )
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def ab_rollup(spark: SparkSession, evidence_dir: str) -> DataFrame:
@@ -1024,12 +982,7 @@ def stream_psi_activity(
             .parquet(dest)
         )
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def psi_rollup(spark: SparkSession, counts_dir: str, baseline: DataFrame) -> DataFrame:
@@ -1140,12 +1093,7 @@ def stream_daily_count_points(
         )
         pts.write.mode("append").parquet(dest)
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def cusum_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -1196,12 +1144,7 @@ def stream_score_points(
         )
         pts.write.mode("append").parquet(dest)
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def auc_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -1247,12 +1190,7 @@ def stream_topk_candidates(
         )
         local.write.mode("append").parquet(dest)
 
-    writer = corpus.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(corpus, write_batch, checkpoint, available_now)
 
 
 def topk_rollup(spark: SparkSession, candidates_dir: str, k: int = 5) -> DataFrame:
@@ -1297,12 +1235,7 @@ def stream_length_points(
         )
         pts.write.mode("append").parquet(dest)
 
-    writer = docs.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(docs, write_batch, checkpoint, available_now)
 
 
 def ks_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -1340,12 +1273,7 @@ def stream_price_points(
         )
         pts.write.mode("append").parquet(dest)
 
-    writer = lineitem.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(lineitem, write_batch, checkpoint, available_now)
 
 
 def weighted_median_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -1394,12 +1322,7 @@ def stream_shingle_points(
         )
         pts.write.mode("append").parquet(dest)
 
-    writer = docs.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(docs, write_batch, checkpoint, available_now)
 
 
 def novelty_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -1461,12 +1384,7 @@ def stream_week_type_points(
         )
         pts.write.mode("append").parquet(dest)
 
-    writer = events.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(events, write_batch, checkpoint, available_now)
 
 
 def jsd_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
@@ -1507,12 +1425,7 @@ def stream_transition_points(
             "append"
         ).parquet(dest)
 
-    writer = tr.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(tr, write_batch, checkpoint, available_now)
 
 
 def conditional_entropy_rollup(spark: SparkSession, points_dir: str) -> DataFrame:
