@@ -8,15 +8,36 @@ Defaults chosen for the 100 TB posture (SURVEY.md §4.2):
 - Arrow enabled for the Pandas-UDF paths (minhash, embeddings, multimodal).
 - `nanosAsLong` because the driver's events.parquet stores timestamp[ns]
   (TESTDATA.md / FIXTURES.md §B); the canonical loader converts to TimestampType.
+- Python workers fork from `_worker_daemon` (`spark.python.daemon.module`), which
+  stops each task from re-reading pyspark.zip, the py4j zip and the spark-core
+  jar on CPython < 3.12 (see that module). The package root joins
+  `spark.executorEnv.PYTHONPATH` so workers import the daemon from any cwd. A
+  cluster whose executors have the package installed can set the same conf
+  (see `cluster_defaults`).
 """
 
 from __future__ import annotations
 
 import os
+import sysconfig
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+WORKER_DAEMON = "guardian_for_apache_kafka_spark._worker_daemon"
+# the directory that holds the package, which workers need on their path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath(user: str | None) -> str:
+    """``user``'s worker PYTHONPATH with the package root appended. An
+    installed package is left out: workers find it already, and a
+    site-packages dir on PYTHONPATH would shadow the standard library."""
+    parts = [p for p in (user or "").split(os.pathsep) if p]
+    installed = {sysconfig.get_path("purelib"), sysconfig.get_path("platlib")}
+    if _PACKAGE_ROOT not in parts and _PACKAGE_ROOT not in installed:
+        parts.append(_PACKAGE_ROOT)
+    return os.pathsep.join(parts)
 
 
 def get_spark(
@@ -56,8 +77,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.python.daemon.module", WORKER_DAEMON)
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf["spark.executorEnv.PYTHONPATH"] = _worker_pythonpath(
+        extra_conf.get("spark.executorEnv.PYTHONPATH")
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -119,6 +145,13 @@ def cluster_defaults(
     - no autoBroadcastJoinThreshold bump: 32m is deliberate — at cluster
       scale a too-large broadcast OOMs the driver first; bucketing
       (operators/bucketing.py) is the right tool past that.
+
+    Not in the dict: ``get_spark`` already sets
+    ``spark.python.daemon.module`` to ``WORKER_DAEMON``, so no Python task
+    re-reads pyspark.zip and the Spark jar (``_worker_daemon``). A cluster
+    whose executors have the package installed can set the same conf
+    through spark-submit; one whose executors lack it passes
+    ``pyspark.daemon`` instead.
     """
     return {
         "spark.sql.shuffle.partitions": str(2 * total_cores),

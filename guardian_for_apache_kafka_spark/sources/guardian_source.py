@@ -659,7 +659,7 @@ class GuardianStreamWriter(DataSourceStreamWriter):
     .format("guardian").option("chronoUnitSlice", "hours")
     .option("checkpointLocation", ...).start(dest)`` appends each
     micro-batch to the ENGINE-NATIVE partitioned JSON-lines archive layout
-    (``<dest>/slice=<ISO>/batch-<id>-<task>.jsonl[.gz]`` — the same layout
+    (``<dest>/slice=<ISO>/batch-<id>-<query>-<part>.jsonl[.gz]`` — the same layout
     ``stream_backup``'s text sink produces and ``restore_batch(...,
     fmt="json")`` prunes/reads; the reference's single-object-per-slice
     JSON-array format is inherently rewrite-per-batch and stays the BATCH
@@ -669,17 +669,21 @@ class GuardianStreamWriter(DataSourceStreamWriter):
     Exactly-once discipline: executors stage each (task, slice) part under
     a run-scoped staging dir (write() never sees the batch id — the
     DataSourceStreamWriter API only reveals it at commit); the driver
-    commit FIRST deletes any ``batch-<id>-*`` files a previously-failed
-    attempt of the SAME batch left behind, then renames the staged parts
-    to their batch-scoped final names — so a crash-replayed micro-batch
-    fully REPLACES its own output instead of duplicating it, regardless of
-    how the retry repartitioned the data. Object-store safe: every touch
-    goes through the same ``_fs_ops`` dispatch as the batch writer
-    (scheme aliases included).
+    commit FIRST deletes any ``batch-<id>-<query>-*`` files a
+    previously-failed attempt of the SAME batch of the SAME query left
+    behind, then renames the staged parts to their batch-scoped final
+    names — so a crash-replayed micro-batch fully REPLACES its own output
+    instead of duplicating it, regardless of how the retry repartitioned
+    the data. Object-store safe: every touch goes through the same
+    ``_fs_ops`` dispatch as the batch writer (scheme aliases included).
 
-    One query per destination: ``batch-<id>-*`` names carry no query
-    identity, so a second query writing overlapping slices of the same
-    destination deletes the first one's files of equal batch id.
+    ``<query>`` is 8 hex chars of the sha1 of the ``checkpointLocation``
+    option: the same on every restart that passes the same location,
+    distinct between checkpoints, so several queries may write overlapping slices of one
+    destination without deleting each other's files. A query whose
+    checkpoint comes from ``spark.sql.streaming.checkpointLocation``
+    instead of the option gets no such identity (the writer's options do
+    not carry it): one such query per destination.
 
     Cites the reference's commit-after-upload resume contract
     (core-backup/.../BackupClientInterface.scala:375-398): Spark's
@@ -687,12 +691,15 @@ class GuardianStreamWriter(DataSourceStreamWriter):
     upload."""
 
     def __init__(self, options, schema: StructType):
+        import hashlib
         import uuid
 
         self.path, self.idx, self.period_us, self.compression, self.level = _writer_options(
             options, schema
         )
         self.staging = f"_guardian_stream_staging_{uuid.uuid4().hex}"
+        checkpoint = options.get("checkpointlocation") or ""
+        self.query = hashlib.sha1(checkpoint.encode()).hexdigest()[:8]
 
     # -- executor side -------------------------------------------------------
     def write(self, iterator) -> GuardianWriteCommit:
@@ -722,10 +729,10 @@ class GuardianStreamWriter(DataSourceStreamWriter):
         _ensure_dest_dir(self.path)
         parts = [p for m in messages if m is not None for p in m.parts]
         suffix = ".jsonl.gz" if self.compression == "gzip" else ".jsonl"
-        prefix = f"batch-{batchId:010d}-"
+        prefix = f"batch-{batchId:010d}-{self.query}-"
         # a failed attempt of THIS batch may have committed some files with
-        # a different task layout: remove every batch-<id>-* first so the
-        # replay REPLACES rather than duplicates
+        # a different task layout: remove this query's batch-<id>-* first so
+        # the replay REPLACES rather than duplicates
         touched = sorted({f"slice={_quote(sv)}" for sv, _ in parts})
         for sdir in touched:
             try:

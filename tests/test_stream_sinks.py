@@ -1,6 +1,6 @@
 """Streaming sinks: the one foreachBatch runner, writer identity in the
-commit-log stream, the guardian stream writer's staging cleanup, and the
-continuous (non-availableNow) trigger."""
+commit-log stream and in the guardian stream writer, the guardian stream
+writer's staging cleanup, and the continuous (non-availableNow) trigger."""
 
 import os
 import uuid
@@ -129,6 +129,54 @@ def test_guardian_stream_writer_leaves_no_staging(spark, records, tmp_path):
     assert len(q.recentProgress) >= 3, "setup: several micro-batches"
     names = os.listdir(dest)
     assert names and all(n.startswith("slice=") for n in names), sorted(names)
+
+
+def test_guardian_stream_writer_two_checkpoints_one_destination(spark, records, tmp_path):
+    """Two ``writeStream.format("guardian")`` queries (two checkpoints)
+    write disjoint records into overlapping slices of one destination: every
+    record restores once. A replayed batch of one checkpoint (its last
+    offset commit deleted) replaces its own files only."""
+    from guardian_for_apache_kafka_spark.operators.restore import restore_batch
+    from guardian_for_apache_kafka_spark.sources import guardian_source as gs
+
+    gs.register_guardian_datasource(spark)
+    dest = str(tmp_path / "arch")
+
+    def run(name: str) -> None:
+        q = (
+            spark.readStream.schema(records.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path / f"src_{name}"))
+            .writeStream.format("guardian")
+            .option("chronoUnitSlice", "hours")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start(dest)
+        )
+        q.awaitTermination(120)
+
+    for name, rem in (("a", 0), ("b", 1)):
+        records.where(F.col("offset") % 2 == rem).repartition(2).write.parquet(
+            str(tmp_path / f"src_{name}")
+        )
+        run(name)
+    total = records.count()
+    restored = restore_batch(spark, dest, fmt="json")
+    assert restored.count() == total
+    assert as_set(restored) == as_set(records)
+    queries_per_slice = [
+        {n.split("-")[2] for n in os.listdir(os.path.join(dest, d))} for d in os.listdir(dest)
+    ]
+    assert any(len(q) == 2 for q in queries_per_slice), "setup: the queries share a slice"
+
+    commits_dir = tmp_path / "ckpt_b" / "commits"
+    last = max(int(n) for n in os.listdir(commits_dir) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if (commits_dir / name).exists():
+            (commits_dir / name).unlink()
+    run("b")
+    assert (commits_dir / str(last)).exists(), "setup: the batch was replayed"
+    assert restore_batch(spark, dest, fmt="json").count() == total
 
 
 def test_stream_manifest_continuous_trigger(spark, records, tmp_path):
