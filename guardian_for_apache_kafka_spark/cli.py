@@ -585,38 +585,34 @@ def main(argv: list[str] | None = None) -> int:
         compression = args.compression
         if bootstrap:
             from guardian_for_apache_kafka_spark.streaming.kafka import kafka_record_stream
-            from guardian_for_apache_kafka_spark.streaming.pipeline import (
-                stream_backup,
-                stream_backup_foreach_batch,
-            )
 
-            records = kafka_record_stream(spark, bootstrap, set(args.kafka_topics or []))
             if not args.checkpoint:
                 raise SystemExit("--checkpoint is required for Kafka-sourced backup")
-            if isinstance(tc, PeriodFromFirst):
-                q = stream_backup_foreach_batch(
-                    records, args.dest, args.checkpoint, tc, instance_id=args.instance_id
-                )
-            else:
-                q = stream_backup(
-                    records, args.dest, args.checkpoint, tc, compression,
-                    instance_id=args.instance_id,
-                )
-            q.awaitTermination()
-        elif args.streaming:
-            from guardian_for_apache_kafka_spark.streaming.pipeline import (
-                records_file_stream,
-                stream_backup,
-                stream_backup_foreach_batch,
-            )
-
-            if not args.source or not args.dest or not args.checkpoint:
+            records = kafka_record_stream(spark, bootstrap, set(args.kafka_topics or []))
+        else:
+            if args.streaming and not (args.source and args.dest and args.checkpoint):
                 raise SystemExit("--source, --dest and --checkpoint are required for --streaming")
-            records = records_file_stream(spark, args.source)
+            if not args.source or not args.dest:
+                raise SystemExit("--source and --dest are required without Kafka")
+            if args.streaming:
+                from guardian_for_apache_kafka_spark.streaming.pipeline import records_file_stream
+
+                records = records_file_stream(spark, args.source)
+            else:
+                records = spark.read.schema(
+                    "topic STRING, partition INT, offset BIGINT, key BINARY, value BINARY, "
+                    "timestamp TIMESTAMP, timestamp_type INT"
+                ).parquet(args.source)
             if args.kafka_topics:
                 from pyspark.sql import functions as F
 
                 records = records.where(F.col("topic").isin(args.kafka_topics))
+        if records.isStreaming:
+            from guardian_for_apache_kafka_spark.streaming.pipeline import (
+                stream_backup,
+                stream_backup_foreach_batch,
+            )
+
             if isinstance(tc, PeriodFromFirst):
                 q = stream_backup_foreach_batch(
                     records, args.dest, args.checkpoint, tc, instance_id=args.instance_id
@@ -633,16 +629,6 @@ def main(argv: list[str] | None = None) -> int:
                 write_guardian_format,
             )
 
-            if not args.source or not args.dest:
-                raise SystemExit("--source and --dest are required without Kafka")
-            records = spark.read.schema(
-                "topic STRING, partition INT, offset BIGINT, key BINARY, value BINARY, "
-                "timestamp TIMESTAMP, timestamp_type INT"
-            ).parquet(args.source)
-            if args.kafka_topics:
-                from pyspark.sql import functions as F
-
-                records = records.where(F.col("topic").isin(args.kafka_topics))
             if args.format == "guardian":
                 write_guardian_format(
                     records, args.dest, tc, compression=compression,

@@ -187,43 +187,38 @@ def normalize_uri(uri: str) -> str:
 
 
 def resolve_fs(uri: str):
-    """(pyarrow FileSystem, inner path) for any ``scheme://`` URI — THE
-    single normalization point for scheme aliases; every sessionless FS
-    touch (slice writer, lister, DataSource reader/writer) routes through
-    here so aliases behave identically on every path (ADVICE/VERDICT r6:
-    the inline copies had drifted — ``_open_bytes`` skipped normalization
-    entirely, so a listed s3a:// object failed on read). Env aliases
-    (:func:`normalize_uri`) apply first, then Hadoop scheme names map to
-    their pyarrow names."""
+    """(pyarrow FileSystem, inner path) for any path a sessionless process
+    touches — THE one place that decides how the slice writer, the lister,
+    the DataSource reader/writer and the streaming anchor reach storage, so
+    aliases and path rules cannot drift between them. A bare path is the
+    local filesystem at ``os.path.abspath(path)``: relative to the process
+    cwd, as ``open`` resolves it (pyarrow's ``from_uri`` rejects relative
+    paths). A ``scheme://`` URI gets the env aliases (:func:`normalize_uri`),
+    then the pyarrow name of its Hadoop scheme; its path is literal, as
+    Hadoop's ``Path`` reads it, so a ``%3A`` in a Spark partition directory
+    name is not decoded to ``:``."""
     from pyarrow import fs as pafs
 
+    if "://" not in uri:
+        return pafs.LocalFileSystem(), os.path.abspath(uri)
     scheme, rest = normalize_uri(uri).split("://", 1)
     scheme = SCHEME_ALIASES.get(scheme, scheme)
-    return pafs.FileSystem.from_uri(f"{scheme}://{rest}")
+    return pafs.FileSystem.from_uri(f"{scheme}://{rest.replace('%', '%25')}")
 
 
 def _open_slice_output(dest: str, name: str):
-    """Executor-side byte stream for one guardian-format object.
-
-    A bare local path uses plain ``open``. Any ``scheme://`` destination goes
-    through ``pyarrow.fs.FileSystem.from_uri`` — the Arrow-native equivalent
-    of the Hadoop FS dispatch the listing/maintenance side uses (executors
-    have no py4j bridge to the JVM Hadoop FS, so the driver-side API can't
-    serve per-partition writers): ``file://`` exercises the same code path in
-    tests, ``s3://``/``gs://``/``hdfs://`` reach object stores. Hadoop-style
-    scheme aliases (s3a, gs) are mapped to their Arrow names. Compression is
-    explicitly disabled — pyarrow would otherwise auto-gzip on the ``.gz``
-    suffix, double-compressing the framed stream."""
-    if "://" not in dest:
-        return open(os.path.join(dest, name), "wb")
+    """Executor-side byte stream for one guardian-format object, opened
+    through :func:`resolve_fs` — the Arrow-native equivalent of the Hadoop
+    FS dispatch the listing/maintenance side uses (executors have no py4j
+    bridge to the JVM Hadoop FS, so the driver-side API can't serve
+    per-partition writers). Compression is explicitly disabled — pyarrow
+    would otherwise auto-gzip on the ``.gz`` suffix, double-compressing the
+    framed stream."""
     filesystem, base = resolve_fs(dest)
     return filesystem.open_output_stream(f"{base.rstrip('/')}/{name}", compression=None)
 
 
 def _ensure_dest_dir(dest: str) -> None:
-    if "://" not in dest:
-        os.makedirs(dest, exist_ok=True)
-        return
     filesystem, base = resolve_fs(dest)
     filesystem.create_dir(base, recursive=True)
 
@@ -346,7 +341,7 @@ def write_guardian_format(
     Spark action; only ``interrupted=True`` adds a ``max(slice)`` aggregate
     job before it, to name the object that gets the sentinel. ``dest`` may
     be a bare local path or any ``scheme://`` URI ``pyarrow.fs`` can dial
-    (file, s3/s3a, gs, hdfs) — see :func:`_open_slice_output`.
+    (file, s3/s3a, gs, hdfs) — see :func:`resolve_fs`.
     """
     _ensure_dest_dir(dest)
     sliced = with_slice(records, config, anchor_us)

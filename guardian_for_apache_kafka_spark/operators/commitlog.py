@@ -188,10 +188,12 @@ def write_log_checkpoint(dest: str, version: int | None = None) -> str:
     the Delta-checkpoint analogue that bounds snapshot resolution to
     O(commits since last checkpoint) instead of O(all commits). Readers use
     it automatically; commits write one every ``CHECKPOINT_INTERVAL``
-    versions. Idempotent (same fold -> same content); a torn write cannot
-    corrupt reads because a checkpoint is only trusted if json-parseable,
-    with fall-back to the full fold."""
-    snap = snapshot(dest, version, use_checkpoint=False)
+    versions. The fold starts from the newest readable checkpoint below it,
+    so writing one reads at most ``CHECKPOINT_INTERVAL`` commits.
+    Idempotent (same fold -> same content); a torn write cannot corrupt
+    reads because a checkpoint is only trusted if json-parseable, with
+    fall-back to the full fold."""
+    snap = snapshot(dest, version)
     path = _checkpoint_path(dest, snap["version"])
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:

@@ -27,7 +27,6 @@ which objects to open through it, listing or commit-log snapshot alike.
 from __future__ import annotations
 
 import datetime as _dt
-import os
 import urllib.parse as _urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,32 +39,25 @@ from guardian_for_apache_kafka_spark.core.model import (
 )
 from guardian_for_apache_kafka_spark.core.timeslice import key_to_datetime, slice_sort_key
 from guardian_for_apache_kafka_spark.operators import commitlog
-from guardian_for_apache_kafka_spark.operators.backup import logical_name, physical_name
+from guardian_for_apache_kafka_spark.operators.backup import (
+    logical_name,
+    physical_name,
+    resolve_fs,
+)
 
 
 def _list_names(dest: str, spark: SparkSession | None) -> list[str]:
     """Child entry names of ``dest``. With a session, listing goes through the
     Hadoop FS API — the storage-API listing the reference does for S4
     (restore-s3/.../RestoreClient.scala:33-43 ``S3.listBucket``) — so any
-    supported scheme (file://, s3a://, gs://, ...) works; without one, plain
-    ``os.listdir`` for bare local paths."""
+    supported scheme (file://, s3a://, gs://, ...) works; without one
+    (sessionless planning, e.g. the Python DataSource) it goes through
+    ``backup.resolve_fs``, the dispatch the guardian writer's executors use."""
     if spark is None:
-        if "://" in dest:
-            # sessionless planning contexts (the Python DataSource) still
-            # reach object stores: pyarrow FS, the same dispatch the
-            # guardian writer's executor side uses — resolve_fs is the one
-            # alias-normalization point (review r6 finding; round 7 moved
-            # the inline copies there).
-            from pyarrow.fs import FileSelector
+        from pyarrow.fs import FileSelector
 
-            from guardian_for_apache_kafka_spark.operators.backup import resolve_fs
-
-            fs, inner = resolve_fs(dest)
-            return [
-                info.base_name
-                for info in fs.get_file_info(FileSelector(inner, recursive=False))
-            ]
-        return os.listdir(dest)
+        fs, inner = resolve_fs(dest)
+        return [info.base_name for info in fs.get_file_info(FileSelector(inner))]
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(dest)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -89,17 +89,14 @@ def _object_partitions(path: str, keys: list[str]) -> list[GuardianObjectPartiti
 
 
 def _open_bytes(path: str) -> bytes:
-    """Read one archive object. ``scheme://`` paths go through
-    ``pyarrow.fs.FileSystem.from_uri`` (the executor-side FS dispatch the
-    guardian writer uses, operators/backup.py); bare paths use plain
-    open."""
-    if "://" in path:
-        from guardian_for_apache_kafka_spark.operators.backup import resolve_fs
+    """Read one archive object's stored bytes through
+    ``operators/backup.resolve_fs`` (the executor-side FS dispatch the
+    guardian writer uses). ``compression=None``: pyarrow would otherwise
+    gunzip a ``.gz`` object on read, and the caller gunzips it again."""
+    from guardian_for_apache_kafka_spark.operators.backup import resolve_fs
 
-        fs, inner = resolve_fs(path)
-        with fs.open_input_stream(inner) as fh:
-            return fh.read()
-    with open(path, "rb") as fh:
+    fs, inner = resolve_fs(path)
+    with fs.open_input_stream(inner, compression=None) as fh:
         return fh.read()
 
 
@@ -352,35 +349,9 @@ class GuardianWriteCommit(WriterCommitMessage):
 
 
 def _fs_ops(dest: str):
-    """(write_bytes, read_bytes, move, delete, rmdir) closures for a bare
-    local path or any ``scheme://`` URI pyarrow.fs can dial — the same
-    dispatch split as operators/backup._open_slice_output."""
-    import os
-
-    if "://" not in dest:
-        def write_bytes(rel: str, data: bytes) -> None:
-            p = os.path.join(dest, rel)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            with open(p, "wb") as fh:
-                fh.write(data)
-
-        def read_bytes(rel: str) -> bytes:
-            with open(os.path.join(dest, rel), "rb") as fh:
-                return fh.read()
-
-        def move(rel_src: str, rel_dst: str) -> None:
-            os.replace(os.path.join(dest, rel_src), os.path.join(dest, rel_dst))
-
-        def delete(rel: str) -> None:
-            os.remove(os.path.join(dest, rel))
-
-        def rmdir(rel: str) -> None:
-            import shutil
-
-            shutil.rmtree(os.path.join(dest, rel), ignore_errors=True)
-
-        return write_bytes, read_bytes, move, delete, rmdir
-
+    """(write_bytes, read_bytes, move, delete, rmdir) closures over paths
+    relative to ``dest``, reached through ``operators/backup.resolve_fs``
+    like every other sessionless archive touch."""
     from guardian_for_apache_kafka_spark.operators.backup import resolve_fs
 
     filesystem, base = resolve_fs(dest)
@@ -393,7 +364,7 @@ def _fs_ops(dest: str):
             fh.write(data)
 
     def read_bytes(rel: str) -> bytes:
-        with filesystem.open_input_stream(f"{base}/{rel}") as fh:
+        with filesystem.open_input_stream(f"{base}/{rel}", compression=None) as fh:
             return fh.read()
 
     def move(rel_src: str, rel_dst: str) -> None:

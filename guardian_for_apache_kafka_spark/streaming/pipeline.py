@@ -59,23 +59,26 @@ def records_file_stream(
     return reader.parquet(source_dir)
 
 
-def _anchor_path(checkpoint: str) -> str:
-    return os.path.join(checkpoint, "_guardian_anchor.json")
+_ANCHOR_NAME = "_guardian_anchor.json"
 
 
 def _load_or_store_anchor(checkpoint: str, batch_df: DataFrame) -> int | None:
-    """Run-scoped PeriodFromFirst anchor, persisted beside the checkpoint so a
-    restarted query keeps slicing against the same origin (§4.3 option (a))."""
-    p = _anchor_path(checkpoint)
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)["anchor_us"]
+    """Run-scoped PeriodFromFirst anchor, persisted inside the checkpoint so a
+    restarted query keeps slicing against the same origin (§4.3 option (a)).
+    Read and written through ``sources/guardian_source._fs_ops`` (hence
+    ``operators/backup.resolve_fs``), so a ``file://`` or object-store
+    checkpoint holds the anchor itself."""
+    from guardian_for_apache_kafka_spark.sources.guardian_source import _fs_ops
+
+    write_bytes, read_bytes, *_ = _fs_ops(checkpoint)
+    try:
+        return json.loads(read_bytes(_ANCHOR_NAME))["anchor_us"]
+    except FileNotFoundError:
+        pass
     row = batch_df.agg(F.min(F.unix_micros("timestamp")).alias("a")).collect()[0]
     if row["a"] is None:
         return None
-    os.makedirs(checkpoint, exist_ok=True)
-    with open(p, "w") as fh:
-        json.dump({"anchor_us": int(row["a"])}, fh)
+    write_bytes(_ANCHOR_NAME, json.dumps({"anchor_us": int(row["a"])}).encode())
     return int(row["a"])
 
 
@@ -462,19 +465,22 @@ def read_cdc_snapshot(spark: SparkSession, snapshot_dir: str, below: int | None 
     (``_SUCCESS`` present — a crashed half-written version is skipped, the
     prior version stays current). ``below`` bounds the search (used by the
     apply loop to read batch N's input as the newest version < N+1, so a
-    REPLAYED batch re-reads the same input it saw the first time)."""
-    versions = []
-    for name in os.listdir(snapshot_dir):
-        if not name.startswith("v="):
-            continue
-        v = int(name[2:])
+    REPLAYED batch re-reads the same input it saw the first time). Listing
+    goes through the Hadoop FS API (operators/restore._list_names, as in
+    :func:`checkpoint_inventory`), so a ``file://`` or object-store
+    snapshot dir reads the same as a bare path."""
+    from guardian_for_apache_kafka_spark.operators.restore import _list_names
+
+    root = snapshot_dir.rstrip("/")
+    versions = sorted(
+        (int(n[2:]) for n in _list_names(root, spark) if n.startswith("v=")), reverse=True
+    )
+    for v in versions:
         if below is not None and v >= below:
             continue
-        if os.path.isfile(os.path.join(snapshot_dir, name, "_SUCCESS")):
-            versions.append(v)
-    if not versions:
-        raise ValueError(f"no complete snapshot version under {snapshot_dir}")
-    return spark.read.parquet(os.path.join(snapshot_dir, f"v={max(versions)}"))
+        if "_SUCCESS" in _list_names(f"{root}/v={v}", spark):
+            return spark.read.parquet(f"{root}/v={v}")
+    raise ValueError(f"no complete snapshot version under {snapshot_dir}")
 
 
 def stream_cdc_apply(

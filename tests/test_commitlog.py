@@ -393,6 +393,35 @@ def test_log_checkpoint_bounds_replay(spark, records, tmp_path, monkeypatch):
         assert got.count() > 0
 
 
+def test_write_log_checkpoint_folds_from_newest_checkpoint(tmp_path, monkeypatch):
+    """Writing a checkpoint folds forward from the newest readable one, so
+    it reads at most CHECKPOINT_INTERVAL commit files however long the log
+    is, and still writes the full fold."""
+    import json as _json
+
+    from guardian_for_apache_kafka_spark.operators import commitlog as cl
+
+    dest = str(tmp_path / "long")
+    keys = [f"2024-01-01T{h:02d}:00:00Z.json" for h in range(4)]
+    for i in range(3 * cl.CHECKPOINT_INTERVAL):
+        op = "remove" if i % 3 == 2 else "add"
+        cl.commit(dest, [{"op": op, "key": keys[i % len(keys)], "records": i}], "churn")
+    full = cl.snapshot(dest, use_checkpoint=False)
+
+    reads = []
+    real_read_commit = cl.read_commit
+
+    def spying_read_commit(d, v):
+        reads.append(v)
+        return real_read_commit(d, v)
+
+    monkeypatch.setattr(cl, "read_commit", spying_read_commit)
+    path = cl.write_log_checkpoint(dest)
+    assert 0 < len(reads) <= cl.CHECKPOINT_INTERVAL, reads
+    with open(path) as fh:
+        assert _json.load(fh) == full
+
+
 def test_restore_batch_snapshot_and_version(spark, records, tmp_path):
     """Bulk restore from a pinned snapshot: point-in-time (version=N),
     latest-committed (snapshot=True), and orphan invisibility — a crashed

@@ -101,6 +101,34 @@ def test_period_from_first_anchor_survives_restart(spark, records, tmp_path):
         assert delta_s % (6 * 3600) == 0
 
 
+def test_period_from_first_anchor_lands_in_file_uri_checkpoint(
+    spark, records, tmp_path, monkeypatch
+):
+    """A ``file://`` checkpoint holds the PeriodFromFirst anchor itself: the
+    anchor is read and written through the sessionless filesystem seam, so
+    nothing appears under the driver's cwd (an os-based anchor made a
+    relative ``file:`` directory there, and a restart from another cwd
+    re-anchored)."""
+    import json as _json
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    src, dest, ckpt = (str(tmp_path / p) for p in ("in", "out", "ckpt"))
+    records.write.parquet(src)
+    q = stream_backup_foreach_batch(
+        records_file_stream(spark, src), dest, f"file://{ckpt}",
+        PeriodFromFirst(dt.timedelta(hours=6)),
+    )
+    q.awaitTermination(120)
+    assert os.listdir(cwd) == []
+    with open(os.path.join(ckpt, "_guardian_anchor.json")) as fh:
+        anchor_us = _json.load(fh)["anchor_us"]
+    first = records.agg(F.min(F.unix_micros("timestamp"))).collect()[0][0]
+    assert anchor_us == first
+    assert rec_set(read_backup_jsonl(spark, dest).drop("slice")) == rec_set(records)
+
+
 def test_stream_slice_counts_equal_batch_g2(spark, records, tmp_path):
     import time
 
@@ -683,6 +711,45 @@ def test_stream_cdc_apply_equals_sequential_merge_and_resumes(spark, tmp_path):
         int(d[2:]) for d in os.listdir(snap) if d.startswith("v=")
     )
     assert versions == [0, 1, 2, 3]
+
+
+def test_stream_cdc_apply_into_file_uri_snapshot_equals_bare_path(spark, tmp_path):
+    """A ``file://`` snapshot dir (which init_cdc_snapshot and Spark write
+    fine) applies and reads back exactly like the bare path: the version
+    listing goes through the Hadoop FS API, not ``os.listdir``."""
+    from guardian_for_apache_kafka_spark.streaming.pipeline import (
+        init_cdc_snapshot,
+        read_cdc_snapshot,
+        stream_cdc_apply,
+    )
+
+    base = spark.createDataFrame(
+        [(1, 10.0, "x"), (2, 20.0, "y"), (3, 30.0, "z")],
+        "k long, v double, tag string",
+    )
+    schema = "k long, v double, tag string, deleted boolean, ts timestamp"
+    t = lambda m: dt.datetime(2024, 1, 1, 0, m)  # noqa: E731
+    src = str(tmp_path / "upd")
+    spark.createDataFrame(
+        [(2, 99.0, "y2", False, t(0)), (4, 40.0, "w", False, t(1)), (1, 0.0, None, True, t(2))],
+        schema,
+    ).coalesce(1).write.parquet(src)
+    spark.createDataFrame([(3, 33.0, "z2", False, t(3))], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+
+    def apply(snap: str, ck: str) -> dict:
+        init_cdc_snapshot(base, snap)
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        q = stream_cdc_apply(stream, snap, ck, "k", ["v", "tag"], "deleted", ("ts",))
+        q.awaitTermination(120)
+        return {r.k: (r.v, r.tag) for r in read_cdc_snapshot(spark, snap).collect()}
+
+    bare = apply(str(tmp_path / "snap"), str(tmp_path / "ck"))
+    uri = apply(f"file://{tmp_path}/snap_uri", str(tmp_path / "ck_uri"))
+    assert bare == {2: (99.0, "y2"), 3: (33.0, "z2"), 4: (40.0, "w")}
+    assert uri == bare
+    assert sorted(os.listdir(tmp_path / "snap_uri")) == sorted(os.listdir(tmp_path / "snap"))
 
 
 def test_stream_enrich_equals_batch_join(spark, records, tmp_path):
